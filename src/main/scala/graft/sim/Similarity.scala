@@ -44,7 +44,7 @@ object Similarity {
   }
 
   /** embeddings with double-vector and precomputed norm */
-  private def vectors(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def vectors(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir).select(
       col("vec_id"), col("label"),
       expr("transform(embedding, x -> cast(x as double))").as("v"))

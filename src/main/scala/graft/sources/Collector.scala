@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -808,6 +809,45 @@ object Collector {
     case other => other.simpleString
   }
 
+  /** Wall-clock guard around one sample query (reference
+    * query_timeout_secs): the body runs on a daemon thread whose Spark
+    * jobs carry a unique job tag; on timeout those jobs are cancelled
+    * (their tasks interrupted, so they stop holding executor slots), the
+    * thread is interrupted, and a plain RuntimeException surfaces, which
+    * sampleWithRetry's degrade path turns into a `failed` SampleStatus
+    * with warnings — a hung source never hangs the survey. (The
+    * identical timeout message at the halved retry limit trips the
+    * deterministic-failure bailout, so a slow table costs at most two
+    * timeout windows.) A tag, not a job group, marks the jobs: a job
+    * group would overwrite the caller's. <= 0 disables the guard.
+    */
+  def withQueryTimeout[T](sc: SparkContext, secs: Long)(body: => T): T =
+    if (secs <= 0) body
+    else {
+      val tag = s"graft-sample-${java.util.UUID.randomUUID()}"
+      val task = new java.util.concurrent.FutureTask(
+        new java.util.concurrent.Callable[T] {
+          def call(): T = {
+            sc.addJobTag(tag)
+            sc.setInterruptOnCancel(true)
+            body
+          }
+        })
+      val th = new Thread(task, "graft-sample-timeout")
+      th.setDaemon(true)
+      th.start()
+      try task.get(secs, java.util.concurrent.TimeUnit.SECONDS)
+      catch {
+        case _: java.util.concurrent.TimeoutException =>
+          task.cancel(true)
+          sc.cancelJobsWithTag(tag)
+          throw new RuntimeException(s"sample query exceeded ${secs}s timeout")
+        case e: java.util.concurrent.ExecutionException =>
+          throw Option(e.getCause).collect { case ex: Exception => ex }
+            .getOrElse(e)
+      }
+    }
+
   /** Halved-limit retry policy around a sampling closure (reference
     * `dbsurveyor-collect/src/sampling.rs`: on failure, halve the limit
     * and try again; record the outcome + warnings instead of aborting).
@@ -817,34 +857,6 @@ object Collector {
     * time — and the retry loop bails out after that second attempt.
     * Returns (rows, status, warnings).
     */
-  /** Wall-clock guard around one sample query (reference
-    * query_timeout_secs): the body runs on a daemon thread; on timeout
-    * the thread is interrupted and a plain RuntimeException surfaces,
-    * which sampleWithRetry's degrade path turns into a `failed`
-    * SampleStatus with warnings — a hung source never hangs the survey.
-    * (The identical timeout message at the halved retry limit trips the
-    * deterministic-failure bailout, so a slow table costs at most two
-    * timeout windows.) <= 0 disables the guard.
-    */
-  def withQueryTimeout[T](secs: Long)(body: => T): T =
-    if (secs <= 0) body
-    else {
-      val task = new java.util.concurrent.FutureTask(
-        new java.util.concurrent.Callable[T] { def call(): T = body })
-      val th = new Thread(task, "graft-sample-timeout")
-      th.setDaemon(true)
-      th.start()
-      try task.get(secs, java.util.concurrent.TimeUnit.SECONDS)
-      catch {
-        case _: java.util.concurrent.TimeoutException =>
-          task.cancel(true)
-          throw new RuntimeException(s"sample query exceeded ${secs}s timeout")
-        case e: java.util.concurrent.ExecutionException =>
-          throw Option(e.getCause).collect { case ex: Exception => ex }
-            .getOrElse(e)
-      }
-    }
-
   def sampleWithRetry(limit: Int, doSample: Int => Seq[Seq[String]])
       : (Seq[Seq[String]], String, Seq[String]) = {
     // the ROOT cause identifies the failure: Spark wraps task failures
@@ -878,17 +890,39 @@ object Collector {
     (Nil, "failed", warnings.result())
   }
 
+  /** `f` over `items` on a fixed pool of `width` driver threads, results
+    * in input order. The threads are created by the calling thread, so
+    * they inherit its Spark local properties (job group, job tags); the
+    * pool is shut down before returning. A body's exception surfaces as
+    * itself once every body has finished.
+    */
+  private def inOrder[A, B](items: Seq[A], width: Int)(f: A => B): Seq[B] = {
+    import scala.jdk.CollectionConverters._
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(width, 1))
+    try pool.invokeAll(items.map(i =>
+        new java.util.concurrent.Callable[B] { def call(): B = f(i) }).asJava)
+      .asScala.toSeq.map { fut =>
+        try fut.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }
+    finally pool.shutdownNow()
+  }
+
   /** Collect the full artifact: schema, row counts, and a deterministic
     * sample per table under the chosen `strategy` (MostRecent: sampling
     * key descending; RandomDet: md5-of-key order; NoSample: metadata
-    * only). One count + one bounded top-k read per table — no full
-    * materialization. A failing table degrades (halved-limit retries,
-    * then a `failed` status with warnings) instead of aborting the
-    * artifact; an unloadable table is recorded as a schema-less `failed`
-    * entry. With `withKeys`, PK candidates and inclusion-dependency FK
-    * edges (KeyInference) are inferred from the data and embedded; with
-    * `withConstraints`, data-derived not-null/unique/range/enum
-    * constraint candidates (ConstraintInference) are embedded too. When
+    * only). Per table: the schema read, one bounded top-k read and one
+    * count — no full materialization. Tables are collected concurrently
+    * on up to `defaultParallelism` driver threads and the artifact keeps
+    * `source.tableNames` order; `throttleMs > 0` collects one table at a
+    * time, pausing before each sample. A failing table degrades
+    * (halved-limit retries, then a `failed` status with warnings)
+    * instead of aborting the artifact; an unloadable table is recorded
+    * as a schema-less `failed` entry. With `withKeys`, PK candidates and
+    * inclusion-dependency FK edges (KeyInference) are inferred from the
+    * data and embedded; with `withConstraints`, data-derived
+    * not-null/unique/range/enum constraint candidates
+    * (ConstraintInference) are embedded too. When
     * the source is a MetadataSource (JDBC, session catalog), engine-
     * collected keys/indexes/layout take precedence over inference and
     * the table is stamped keyProvenance = "collected" — the reference's
@@ -921,8 +955,17 @@ object Collector {
           false
         }
       }
+    // tables are surveyed concurrently: each one's load (the schema job),
+    // sample and count are a handful of small jobs that are mostly
+    // scheduler latency, so overlapping tables fills the idle slots. A
+    // throttled survey keeps the reference's politeness contract: one
+    // table at a time, with the pause between tables.
+    val names = source.tableNames
+    val width =
+      if (throttleMs > 0) 1
+      else math.min(names.size, SparkSession.active.sparkContext.defaultParallelism)
     val loaded: Seq[(String, Option[DataFrame], Seq[String])] =
-      source.tableNames.map { t =>
+      inOrder(names, width) { t =>
         try { val df = source.load(t); (t, Some(df), Nil) }
         catch { case e: Exception =>
           (t, None, Seq(s"load failed: ${e.getClass.getSimpleName}: ${e.getMessage}"))
@@ -944,8 +987,6 @@ object Collector {
       }.toMap
       case _ => Map.empty
     }
-    def collectedPk(t: String): Seq[String] =
-      collectedMeta.get(t).map(_._1.primaryKey).getOrElse(Nil)
     val pkMap: Map[String, Seq[String]] =
       if (withKeys && goodTables.nonEmpty)
         KeyInference.primaryKeysFor(goodTables)
@@ -1002,7 +1043,7 @@ object Collector {
       if (withConstraints && goodTables.nonEmpty)
         ConstraintInference.constraintsFor(goodTables)
       else Map.empty
-    val tables = loaded.map {
+    val tables = inOrder(loaded, width) {
       case (t, None, warns) =>
         TableInfo(t, Nil, -1L, Nil, Nil, sampleStatus = "failed", warnings = warns,
           samplingStrategy = strategy.strategyName)
@@ -1053,7 +1094,7 @@ object Collector {
           val (sample, status, warns) = strategy match {
             case SamplingStrategy.NoSample => (Nil, "skipped", Nil)
             case _ => sampleWithRetry(effSample, l =>
-              withQueryTimeout(queryTimeoutSecs) {
+              withQueryTimeout(df.sparkSession.sparkContext, queryTimeoutSecs) {
                 df.orderBy(ordering).limit(l).collect().toSeq.map(r =>
                   r.toSeq.map(v => if (v == null) "NULL" else v.toString))
               })

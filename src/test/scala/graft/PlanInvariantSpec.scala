@@ -56,9 +56,14 @@ class PlanInvariantSpec extends AnyFunSuite {
   }
 
   test("banded LSH pair generation joins on (band, key), never all-pairs") {
-    val p = plan("dedup_embedding")
+    // the band join lives in the shared lsh-pairs derivation; its
+    // consumers read the materialized artifact back as a parquet scan
+    val sim = graft.sim.Similarity
+    val p = sim.lshPairsFor(sim.vectors(spark, sf)).queryExecution.sparkPlan.toString
     assert(p.contains("band"), p)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
+    val d = plan("dedup_embedding")
+    assert(d.contains("FileScan parquet") && d.contains("_lsh-pairs.parquet"), d)
   }
 
   test("bounded top-k plans as TakeOrderedAndProject, not a global sort") {

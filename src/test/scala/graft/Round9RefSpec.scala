@@ -90,6 +90,72 @@ class Round9RefSpec extends AnyFunSuite {
     assert(t.sampleStatus == "failed")
     assert(t.warnings.exists(_.contains("timeout")))
     assert(a.server.exists(_.accessLevel == "limited"))
+    // the timed-out sample jobs are cancelled, not left sleeping in
+    // executor slots after the survey has moved on
+    val tracker = spark.sparkContext.statusTracker
+    val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
+    while (tracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    assert(tracker.getActiveJobIds.isEmpty, tracker.getActiveJobIds.toSeq)
+  }
+
+  test("concurrent and one-table-at-a-time collection give the same artifact") {
+    val src = new ParquetSource(spark, sf)
+    val at = "2026-01-01T00:00:00Z"
+    def timeless(a: Artifact): Artifact =
+      a.copy(server = a.server.map(_.copy(collectionDurationMs = 0L)))
+    val concurrent = Collector.collect(src, sampleSize = 3, collectedAt = at)
+    val serial = Collector.collect(src, sampleSize = 3, collectedAt = at,
+      throttleMs = 1L)
+    assert(concurrent.tables.map(_.name) == src.tableNames)
+    assert(timeless(concurrent) == timeless(serial))
+  }
+
+  test("concurrent collection degrades only the failing tables, in order") {
+    val base = new ParquetSource(spark, sf)
+    val sleep = udf { (x: Long) => Thread.sleep(30000L); x }
+    val mixed = new TableSource {
+      def name: String = "mixed"
+      def tableNames: Seq[String] = Seq("region", "ghost", "nation", "slow", "supplier")
+      def load(table: String): DataFrame = table match {
+        case "ghost" => throw new RuntimeException("no such table")
+        // loads fine; only the sample (ordered by the slowed key) hangs
+        case "slow" => base.load("region")
+          .withColumn("r_regionkey", sleep(col("r_regionkey")))
+        case t => base.load(t)
+      }
+    }
+    val a = Collector.collect(mixed, sampleSize = 2, queryTimeoutSecs = 2L)
+    assert(a.tables.map(_.name) == mixed.tableNames)
+    val byName = a.tables.map(t => t.name -> t).toMap
+    assert(byName("ghost").sampleStatus == "failed" &&
+      byName("ghost").warnings.exists(_.contains("load failed")))
+    assert(byName("slow").sampleStatus == "failed" &&
+      byName("slow").warnings.exists(_.contains("timeout")))
+    assert(byName("slow").rowCount == byName("region").rowCount)
+    assert(Seq("region", "nation", "supplier").forall(byName(_).sampleStatus == "success"))
+    assert(a.server.exists(_.accessLevel == "limited"))
+    assert(Collector.validate(a).isEmpty)
+  }
+
+  test("collection overlaps tables: two loads are in flight at once") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    import scala.jdk.CollectionConverters._
+    val bothLoading = new CountDownLatch(2)
+    val met = new ConcurrentLinkedQueue[Boolean]()
+    val pair = new OneTableSource(plantedDir) {
+      override def tableNames: Seq[String] = Seq("users", "users_again")
+      override def load(table: String): DataFrame = {
+        bothLoading.countDown()
+        // bounded: a serialized collect fails here instead of hanging
+        met.add(bothLoading.await(10, TimeUnit.SECONDS))
+        super.load("users")
+      }
+    }
+    val a = Collector.collect(pair, sampleSize = 2)
+    assert(met.asScala.toSeq == Seq(true, true))
+    assert(a.tables.map(_.name) == Seq("users", "users_again"))
+    assert(a.tables.forall(_.sampleStatus == "success"))
   }
 
   test("atomic artifact writes replace the target and leave no staging files") {
