@@ -47,7 +47,7 @@ object Similarity {
   private[graft] def vectors(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir).select(
       col("vec_id"), col("label"),
-      expr("transform(embedding, x -> cast(x as double))").as("v"))
+      col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(graft.functions.VectorOps.dot_product(col("v"), col("v"))))
 
   private val vectorsSql =

@@ -142,15 +142,16 @@ object BpeTrainer {
     * Shape: training is the bounded bpeTrain loop (driver state = K
     * rows); encoding is PURE per-row column work — each word is
     * symbolized and run through the same padded double-replace chain
-    * (in rank order, exactly as trained), entirely inside
-    * `transform`/`aggregate` higher-order lambdas. ZERO data shuffle:
-    * the only exchange in the plan is the presentation ORDER BY. At
-    * 100 TB the encode is embarrassingly parallel map work; the
-    * trained merge table rides along as K string literals (a real
-    * tokenizer's merge table is config-sized — same story).
+    * (in rank order, exactly as trained) by the native
+    * `graft.functions.BpeTokenCount` kernel, one compiled call per
+    * document. ZERO data shuffle: the only exchange in the plan is the
+    * presentation ORDER BY. At 100 TB the encode is embarrassingly
+    * parallel map work; the trained merge table rides along inside the
+    * expression as K pattern/replacement pairs (a real tokenizer's
+    * merge table is config-sized — same story).
     *
     * Per-word cost is inherent (the merge chain must visit every
-    * word); the lambda does exactly that once per word — not the
+    * word); the kernel does exactly that once per word — not the
     * PLANS.md pitfall-#2 shape (no O(elements²) re-evaluation).
     *
     * cpt_e4 = chars-per-token ×10⁴ via BIGINT integer division —
@@ -159,35 +160,23 @@ object BpeTrainer {
   private val wordsCol: org.apache.spark.sql.Column =
     filter(split(col("text"), " "), t => t =!= lit(""))
 
-  /** The per-word encode fold over a trained merge list: symbolize, run
-    * the padded double-replace chain in rank order, count symbols left.
-    */
-  private def encodeWordWith(learned: Array[(String, String)])(
-      t: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val spaced = concat(lit(" "), concat_ws(" ", split(t, "")), lit(" "))
-    val merged = learned.foldLeft(spaced) { case (c, (a, b)) =>
-      val pat = lit(s" $a $b ")
-      val rep = lit(s" $a$b ")
-      replace(replace(c, pat, rep), pat, rep)
-    }
-    size(split(trim(merged), " ")).cast("long")
-  }
-
   /** `documents` with a learned-subword `toks` column — the BPE
     * accounting unit the curation ops (pack_shards/mix_weights/
     * mix_temperature) can budget with instead of whitespace tokens.
-    * Same zero-shuffle per-row fold as bpeEncode; a wordless document
-    * gets toks = 0 (aggregate over an empty array).
+    * Same zero-shuffle per-row count as bpeEncode's `n_tokens` (the
+    * native `graft.functions.BpeTokenCount` kernel); a wordless document
+    * gets toks = 0.
     */
   def withBpeTokens(spark: SparkSession, dir: String,
-      merges: Int = defaultMerges): DataFrame = {
-    val learned = trainedMerges(spark, dir, merges)
-      .map(t => (t._2, t._3)).toArray
+      merges: Int = defaultMerges): DataFrame =
     Tables.documents(spark, dir)
-      .withColumn("toks",
-        aggregate(transform(wordsCol, encodeWordWith(learned) _), lit(0L),
-          (acc, x) => acc + x))
-  }
+      .withColumn("toks", bpeTokenCount(spark, dir, merges))
+
+  /** `text`'s learned-subword token count under the trained merges. */
+  private def bpeTokenCount(spark: SparkSession, dir: String,
+      merges: Int): org.apache.spark.sql.Column =
+    graft.functions.TextOps.bpe_token_count(col("text"),
+      trainedMerges(spark, dir, merges).map(t => (t._2, t._3)))
 
   /** The per-document BPE token accounting `(doc_id, source, toks)` as a
     * LAKE-MATERIALIZED SHARED ARTIFACT (SharedArtifacts.materialized —
@@ -196,7 +185,7 @@ object BpeTrainer {
     * curation ops (pack_shards_bpe, mix_weights_bpe, mix_waterfill_bpe)
     * evaluate this frame several times each per invocation (GlobalRank's
     * two passes, lane joins, rollups); un-memoized, every evaluation
-    * re-paid the trained-merge fold over the whole corpus. A production
+    * re-paid the trained-merge count over the whole corpus. A production
     * pipeline materializes the tokenized accounting column ONCE in the
     * lake next to the text; this artifact IS exactly that table — and
     * since r11 it lives on disk, not pinned in executor storage for the
@@ -212,16 +201,11 @@ object BpeTrainer {
     }
 
   def bpeEncode(spark: SparkSession, dir: String, merges: Int = defaultMerges): DataFrame = {
-    val learned = trainedMerges(spark, dir, merges)
-      .map(t => (t._2, t._3)).toArray
     val words = wordsCol
-    def encodeWord(t: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      encodeWordWith(learned)(t)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         size(words).cast("long").as("n_words"),
-        aggregate(transform(words, encodeWord _), lit(0L), (acc, x) => acc + x)
-          .as("n_tokens"),
+        bpeTokenCount(spark, dir, merges).as("n_tokens"),
         aggregate(transform(words, t => length(t).cast("long")), lit(0L),
           (acc, x) => acc + x).as("n_sym"))
       .filter(col("n_words") >= 1)
@@ -320,7 +304,7 @@ object BpeTrainer {
     * wrong language, boilerplate-skewed merges) — its effective context
     * window shrinks and its per-token cost rises; this report is where
     * that shows first. Shares the trained-encode derivation with
-    * bpe_encode verbatim (same merges, same fold), so the fertility
+    * bpe_encode verbatim (same merges, same kernel), so the fertility
     * accounting cannot drift from what bpe-budgeted packing charges.
     *
     * Scale shape: the encode is the same single scan bpe_encode runs

@@ -247,7 +247,7 @@ object Search {
       "lex_rank", col("bm25_score").desc, col("doc_id"))
     val vecs = Tables.embeddings(spark, dir).select(
         col("vec_id"),
-        expr("transform(embedding, x -> cast(x as double))").as("v"))
+        col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm",
         sqrt(graft.functions.VectorOps.dot_product(col("v"), col("v"))))
     val qv = vecs.filter(col("vec_id") === hybridQueryVec)

@@ -274,18 +274,14 @@ object TextStats {
 
   /** Min-shingle fingerprint: the minimum md5 over all character 5-gram
     * shingles (a 1-permutation MinHash — the winnowing-style rolling
-    * fingerprint, computed as pure array expressions).
+    * fingerprint), computed per row by the native
+    * `graft.functions.MinShingleMd5` kernel. Texts under 5 characters
+    * have no 5-gram and get NULL, as the oracle's empty `list_min` does.
     */
   def fingerprint(spark: SparkSession, dir: String): DataFrame = {
     Tables.documents(spark, dir)
       .select(col("doc_id"),
-        // texts under 5 chars have no 5-gram: emit NULL (matches the
-        // oracle's empty list_min; Spark's descending sequence(1, 0)
-        // would otherwise index position 0 and fabricate a value)
-        expr("""CASE WHEN length(text) >= 5
-               | THEN array_min(transform(sequence(1, length(text) - 4), i -> md5(substring(text, i, 5))))
-               | ELSE NULL END""".stripMargin.replaceAll("\n", ""))
-          .as("fingerprint"))
+        graft.functions.TextOps.min_shingle_md5(col("text"), 5).as("fingerprint"))
       .orderBy(col("doc_id"))
   }
 

@@ -1,7 +1,16 @@
 package graft
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.{BpeTokenCount, MinShingleMd5, TextOps}
 import graft.text.{Curation, TextStats}
 
 /** Semantic invariants for the curation-stage operators on sf0.001
@@ -349,5 +358,104 @@ class CurationSpec extends AnyFunSuite {
     // deterministic: rerun is identical
     val again = Curation.mixApply(spark, dir).collect()
     assert(rows.map(_.toString).toSeq == again.map(_.toString).toSeq)
+  }
+
+  // ---- native text kernels vs the lambda forms they replaced --------
+  //
+  // Generated strings mix ASCII, runs of spaces and 2-, 3- and 4-byte
+  // code points, 0-12 code points long, plus NULL. Each kernel runs
+  // through a DataFrame (whole-stage codegen, `doGenCode`) and through
+  // `eval` on a bound row (interpreted, `nullSafeEval`); both must equal
+  // the old higher-order-lambda expression row for row.
+
+  private val kernelStrings: Seq[String] = {
+    val codePoint = Gen.oneOf(
+      Gen.oneOf("a", "b", "c", "x"),
+      Gen.const(" "), Gen.const("   "),
+      Gen.oneOf("é", "ß"),       // 2 bytes
+      Gen.oneOf("中", "文"),     // 3 bytes
+      Gen.oneOf("😀", "𝔸"),     // 4 bytes
+      // merge pairs, so repeats build the chains only a second
+      // replace pass catches
+      Gen.oneOf("ab", "xx", "😀😀"))
+    val gen = for {
+      n <- Gen.choose(0, 12)
+      cps <- Gen.listOfN(n, codePoint)
+    } yield cps.mkString.codePoints.limit(12).toArray
+      .map(cp => new String(Character.toChars(cp))).mkString
+    (0 until 400).flatMap(i => gen(Gen.Parameters.default, Seed(7919L + i))) :+ null
+  }
+
+  /** `c` over `kernelStrings`, in order. The frame is an RDD, so the
+    * projection runs in tasks instead of being folded at planning time;
+    * with `compiled = Some(name)` it must also sit inside whole-stage
+    * codegen (a lambda in the same projection would knock it out). */
+  private def kernelColumn(c: Column, compiled: Option[String] = None): Seq[Any] = {
+    import spark.implicits._
+    val df = spark.sparkContext.parallelize(kernelStrings.zipWithIndex.map(_.swap), 3)
+      .toDF("id", "text").select(col("id"), c)
+    compiled.foreach { name =>
+      val plan = df.queryExecution.executedPlan
+      assert(plan.collect { case w: WholeStageCodegenExec => w.child.collect {
+        case p: ProjectExec if p.projectList.exists(_.toString.contains(name)) => p
+      } }.flatten.nonEmpty, plan.toString)
+    }
+    df.collect().sortBy(_.getInt(0)).map(_.get(1)).toSeq
+  }
+
+  private def evalOn(e: org.apache.spark.sql.catalyst.expressions.Expression,
+      s: String): Any =
+    e.eval(InternalRow(if (s == null) null else UTF8String.fromString(s)))
+
+  test("min_shingle_md5 equals the array_min-of-md5 lambda, codegen and interpreted") {
+    for (k <- Seq(1, 3, 5)) {
+      val reference = expr(
+        s"""CASE WHEN length(text) >= $k THEN array_min(transform(
+           |  sequence(1, length(text) - ${k - 1}), i -> md5(substring(text, i, $k))))
+           |  ELSE NULL END""".stripMargin)
+      val want = kernelColumn(reference)
+      val got = kernelColumn(TextOps.min_shingle_md5(col("text"), k), Some("min_shingle_md5"))
+      val interpreted = MinShingleMd5(BoundReference(0, StringType, nullable = true), k)
+      kernelStrings.indices.foreach { i =>
+        val text = kernelStrings(i)
+        assert(got(i) == want(i), s"k=$k codegen, text='$text'")
+        val viaEval = Option(evalOn(interpreted, text)).map(_.toString).orNull
+        assert(viaEval == want(i), s"k=$k interpreted, text='$text'")
+      }
+      // the generator reaches both sides of the k-code-point cut
+      assert(want.contains(null) && want.exists(_ != null))
+    }
+  }
+
+  test("bpe_token_count equals the transform/aggregate merge-chain lambda, codegen and interpreted") {
+    // chains over every byte width, plus merges that build on earlier ones
+    val merges = Seq(("a", "b"), ("ab", "c"), ("é", "中"), ("😀", "😀"),
+      ("x", "x"), ("😀😀", "𝔸"), ("c", "c"), ("文", "ß"))
+    def encodeWord(t: Column): Column = {
+      val spaced = concat(lit(" "), concat_ws(" ", split(t, "")), lit(" "))
+      val merged = merges.foldLeft(spaced) { case (c, (a, b)) =>
+        val pat = lit(s" $a $b ")
+        val rep = lit(s" $a$b ")
+        replace(replace(c, pat, rep), pat, rep)
+      }
+      size(split(trim(merged), " ")).cast("long")
+    }
+    val words = filter(split(col("text"), " "), t => t =!= lit(""))
+    val reference = aggregate(transform(words, encodeWord _), lit(0L), (acc, x) => acc + x)
+    val want = kernelColumn(reference)
+    val got = kernelColumn(TextOps.bpe_token_count(col("text"), merges), Some("bpe_token_count"))
+    val interpreted = BpeTokenCount(BoundReference(0, StringType, nullable = true), merges)
+    kernelStrings.indices.foreach { i =>
+      val text = kernelStrings(i)
+      assert(got(i) == want(i), s"codegen, text='$text'")
+      assert(evalOn(interpreted, text) == want(i), s"interpreted, text='$text'")
+    }
+    // NULL stays NULL, a wordless text counts 0, and merges really fired
+    val byText = kernelStrings.zip(want).toMap
+    assert(byText(null) == null && byText("") == 0L)
+    assert(byText.exists { case (t, n) =>
+      val syms = Option(t).map(_.replace(" ", "")).getOrElse("")
+      n != null && n.asInstanceOf[Long] < syms.codePointCount(0, syms.length)
+    })
   }
 }

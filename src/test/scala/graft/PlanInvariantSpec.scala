@@ -351,4 +351,20 @@ class PlanInvariantSpec extends AnyFunSuite {
     // streamed side stays partitioned
     assert(p.contains("BroadcastHashJoin"), p)
   }
+
+  test("curation text hot paths run native kernels, never interpreted lambdas") {
+    // higher-order lambdas are CodegenFallback: an edit that brings one
+    // back into the fingerprint or the BPE token count re-interprets
+    // every shingle / word per row
+    def executed(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.executedPlan.toString
+    // the probe sees a lambda when one is there
+    assert(executed(Tables.documents(spark, sf)
+      .selectExpr("transform(split(text, ' '), t -> length(t))"))
+      .contains("lambdafunction"))
+    val fp = executed(SparkEntry.queries("text_fingerprint")(spark, sf))
+    assert(fp.contains("min_shingle_md5") && !fp.contains("lambdafunction"), fp)
+    val toks = executed(graft.text.BpeTrainer.withBpeTokens(spark, sf))
+    assert(toks.contains("bpe_token_count") && !toks.contains("lambdafunction"), toks)
+  }
 }
