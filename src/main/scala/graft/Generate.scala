@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.sources.{Collector, ParquetSource}
 import graft.output.{ArtifactJson, MarkdownDoc, SqlDdlDoc, MermaidDoc, HtmlDoc}
 
@@ -55,13 +54,7 @@ object Generate {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_out"
     val sampleSize = if (args.length > 2) args(2).toInt else 5
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("local[4]", 4)
     val strategy = sys.env.get("GRAFT_STRATEGY") match {
       case Some("random") => Collector.SamplingStrategy.RandomDet
       case Some("none") => Collector.SamplingStrategy.NoSample

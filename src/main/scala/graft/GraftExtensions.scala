@@ -7,9 +7,16 @@ import graft.functions.DotProduct
 
 /** SparkSessionExtensions entry point: registers graft's native
   * expressions under SQL names so `spark.sql("SELECT dot_product(a, b)")`
-  * works session-wide. Wire up with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `--conf spark.sql.extensions=graft.GraftExtensions` on a cluster.
+  * works session-wide, and the planner strategy for the as-of join
+  * (`AsOf.join` has no other registration). `GraftSession` wires it up
+  * with `withExtensions`. A cluster caller that builds its own session
+  * passes the extensions together with the two parquet confs that
+  * `GraftSession` sets (see its scaladoc for why):
+  * {{{
+  * --conf spark.sql.extensions=graft.GraftExtensions
+  * --conf spark.sql.legacy.parquet.nanosAsLong=true
+  * --conf spark.sql.parquet.inferTimestampNTZ.enabled=false
+  * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Measurement main (optimization rounds): per-query Spark-job / stage /
@@ -23,13 +22,7 @@ object Meter {
       else SparkEntry.queries.keys.toSeq.sorted
     val nRuns = if (args.length > 2) args(2).toInt else 1
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
@@ -53,10 +46,7 @@ object Meter {
     println(f"${"query"}%-28s ${"wall_s"}%8s ${"jobs"}%5s ${"stages"}%6s ${"tasks"}%6s ${"shR_mb"}%8s ${"shW_mb"}%8s")
     names.foreach { n =>
       (1 to nRuns).foreach { run =>
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .filterNot(r => SharedArtifacts.contains(r.id))
-          .foreach(_.unpersist(blocking = false))
+        SharedArtifacts.clearBetweenQueries(spark)
         jobs.set(0); stages.set(0); tasks.set(0); shRead.set(0L); shWrite.set(0L)
         val t0 = System.nanoTime()
         try {

@@ -12,20 +12,13 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // events.ts is parquet TIMESTAMP(NANOS) in some testdata generations;
-    // without this conf ANY read of that file throws. Set unconditionally
-    // so access order never matters.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Other generations write timestamps as un-adjusted int64 micros,
-    // which Spark 4 infers as TIMESTAMP_NTZ — breaking every
-    // unix_micros/window call downstream. Read them as session-TZ
-    // timestamps (sessions pin UTC, so the stored micros pass through
-    // unchanged — same value DuckDB's epoch_us sees).
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+  /** Reads with the session's parquet confs: the session must be built
+    * by `GraftSession` (or carry its two parquet confs), which decides
+    * how nanosecond and un-adjusted timestamps load.
+    */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
     else spark.read.parquet(s"$dir/$name.parquet")
-  }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
@@ -35,13 +28,12 @@ object Tables {
   def orders(s: SparkSession, d: String): DataFrame    = table(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = table(s, d, "lineitem")
   /** `events.ts` is parquet TIMESTAMP(NANOS), which Spark 4 refuses by
-    * default. Read it as a nanos long and normalize to a microsecond
-    * TimestampType (truncation = floor, identical to DuckDB's epoch_us),
-    * so every downstream operator sees a plain timestamp column.
+    * default; `GraftSession`'s `nanosAsLong` reads it as a nanos long.
+    * Normalize that to a microsecond TimestampType (truncation = floor,
+    * identical to DuckDB's epoch_us), so every downstream operator sees a
+    * plain timestamp column.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     val raw = s.read.parquet(s"$d/events.parquet")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -18,14 +18,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // same between-query boundary as Bench: free CacheManager entries
-      // AND localCheckpoint-backed RDDs (GlobalRank/fixpoint rounds) so a
-      // 178-query single-JVM dump doesn't accumulate dead storage blocks
-      // (shared pipeline artifacts exempted — see SharedArtifacts)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .filterNot(r => SharedArtifacts.contains(r.id))
-        .foreach(_.unpersist(blocking = false))
+      // same between-query boundary as Bench, so a single-JVM dump of
+      // every query doesn't accumulate dead storage blocks
+      SharedArtifacts.clearBetweenQueries(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -39,7 +34,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // keys sorted, so the file is diffable from one run to the next
+    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
   }
@@ -51,13 +47,7 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(s"local[$cpus]", cpus.toInt)
     dump(spark, sfDir, outDir, only)
     spark.stop()
   }

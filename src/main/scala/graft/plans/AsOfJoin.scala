@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
@@ -117,16 +117,12 @@ object AsOfJoinStrategy extends SparkStrategy {
 
 object AsOf {
   /** As-of join two frames whose first two columns are (key: Long,
-    * time: Long). Works in sessions built with GraftExtensions; for plain
-    * sessions the strategy is injected on first use via
-    * `experimental.extraStrategies`.
+    * time: Long). The session must carry `GraftExtensions` (every
+    * `GraftSession` does), whose planner strategy is the only one that
+    * plans `AsOfJoinPlan`; without it Spark's planner fails with
+    * "No plan for AsOfJoinPlan".
     */
-  def join(left: DataFrame, right: DataFrame): DataFrame = {
-    val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    PlanBridge.ofRows(spark,
+  def join(left: DataFrame, right: DataFrame): DataFrame =
+    PlanBridge.ofRows(left.sparkSession,
       AsOfJoinPlan(PlanBridge.logical(left), PlanBridge.logical(right)))
-  }
 }

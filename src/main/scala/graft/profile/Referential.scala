@@ -189,10 +189,16 @@ object Referential {
     val meta = idx.map { case ((ct, cc, pt, pc), i) => (i, ct, cc, pt, pc) }
       .toDF("eid", "child_table", "child_column", "parent_table",
         "parent_column")
-    broadcast(meta).join(perEdge, Seq("eid"))
+    // LEFT from meta: an edge whose parent has no non-null keys has no
+    // perEdge row but still gets its one row (n_parents 0), as the
+    // oracle's ungrouped aggregate does. No broadcast hint: a left outer
+    // join cannot build its preserved side; AQE broadcasts the 8-row
+    // perEdge instead.
+    meta.join(perEdge, Seq("eid"), "left_outer")
       .select(col("child_table"), col("child_column"),
           col("parent_table"), col("parent_column"),
-          col("n_parents"), col("n_matched_parents"),
+          coalesce(col("n_parents"), lit(0L)).as("n_parents"),
+          col("n_matched_parents"),
           expr("""CAST(CAST((n_parents - n_matched_parents) AS DECIMAL(38,0)) * 1000000
                  |  DIV n_parents AS BIGINT)""".stripMargin).as("childless_ppm"),
           coalesce(col("min_f"), lit(0L)).as("min_fanout"),

@@ -29,4 +29,14 @@ class AsOfSpec extends AnyFunSuite {
     val n = Relational.qAsofCustom(spark, sf).count()
     assert(n == Tables.events(spark, sf).count())
   }
+
+  test("reading every table and the custom as-of join leave the session unchanged") {
+    val s = spark.newSession()
+    val confBefore = s.conf.getAll
+    val strategiesBefore = s.experimental.extraStrategies
+    Tables.all.foreach(t => Tables.table(s, sf, t).count())
+    assert(SparkEntry.queries("q_asof_custom")(s, sf).collect().nonEmpty)
+    assert(s.conf.getAll == confBefore)
+    assert(s.experimental.extraStrategies == strategiesBefore)
+  }
 }

@@ -34,4 +34,26 @@ class OracleParitySpec extends AnyFunSuite {
       s"oracle_check.py exit $code:\n${fails.mkString("\n")}\n" +
         log.linesIterator.toSeq.takeRight(2).mkString("\n"))
   }
+
+  /** SHA-256 of the sorted names, newline-joined. A deliberate change to
+    * the registry updates the count and digest here in the same commit;
+    * the current values are in the failure message.
+    */
+  private def digest(names: Iterable[String]): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(names.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
+      .map(b => f"${b & 0xff}%02x").mkString
+
+  test("registry: unique names, pinned query and oracle sets, five rows-only queries") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.distinct.size == names.size,
+      s"repeated names: ${names.diff(names.distinct).mkString(", ")}")
+    val (q, o) = (SparkEntry.queries.keySet, SparkEntry.oracleSql.keySet)
+    assert((q.size, digest(q)) ==
+      (265, "92f9b8c90c4964c93af5b332c3e26e1b5bc58947e9f40cc41d5a1a354130249d"))
+    assert((o.size, digest(o)) ==
+      (260, "62be47b30d49d2b63586f03e13c5c123d281c182aa81a96d655eb11dc52eeae8"))
+    assert(q -- o == Set("catalog_routines", "dedup_bloom_gate", "env_fingerprint",
+      "infer_constraints_approx", "profile_table_approx"))
+  }
 }

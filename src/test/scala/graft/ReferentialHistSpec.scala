@@ -67,6 +67,49 @@ class ReferentialHistSpec extends AnyFunSuite {
     }
   }
 
+  test("join cardinality keeps an edge whose parent table is empty, as the oracle does") {
+    import java.nio.file.{Files, Paths}
+    // sf0.001 with region.parquet emptied (schema kept); the other tables
+    // are links to the fixture files
+    val lake = Files.createTempDirectory("empty_region")
+    val staging = Files.createTempDirectory("empty_region_write")
+    val out = Files.createTempDirectory("empty_region_out")
+    // Files.walk does not follow the links, so only the links are deleted
+    def rmTree(p: java.nio.file.Path): Unit = {
+      val s = Files.walk(p)
+      try s.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
+      finally s.close()
+    }
+    try {
+      Tables.all.filter(_ != "region").foreach(t =>
+        Files.createSymbolicLink(lake.resolve(s"$t.parquet"), Paths.get(sf, s"$t.parquet")))
+      val staged = staging.resolve("out").toString
+      Tables.region(spark, sf).limit(0).coalesce(1).write.parquet(staged)
+      val part = new java.io.File(staged).listFiles().filter(_.getName.endsWith(".parquet")).head
+      Files.move(part.toPath, lake.resolve("region.parquet"))
+      val dir = lake.toString
+
+      val rows = Referential.profileJoinCardinality(spark, dir).collect()
+      assert(rows.length == Referential.edges.length)
+      val r = rows.find(_.getAs[String]("child_table") == "nation").get
+      assert(r.getAs[String]("parent_table") == "region")
+      assert(r.getAs[Long]("n_parents") == 0L)
+      assert(r.isNullAt(r.fieldIndex("n_matched_parents")))
+      assert(r.isNullAt(r.fieldIndex("childless_ppm")))
+      assert(r.getAs[Long]("min_fanout") == 0L)
+      assert(r.getAs[Long]("avg_fanout_ppm") == 0L && r.getAs[Long]("max_over_avg_ppm") == 0L)
+
+      // the same lake through the driver's DuckDB compare
+      assume(new java.io.File("scripts/oracle_check.py").isFile,
+        "run from the repo root (sbt loads the project there)")
+      Verify.dump(spark, dir, out.toString, Some(Set("profile_join_cardinality")))
+      val proc = new ProcessBuilder("python3", "scripts/oracle_check.py", dir, out.toString,
+        "profile_join_cardinality").redirectErrorStream(true).start()
+      val log = scala.io.Source.fromInputStream(proc.getInputStream).mkString
+      assert(proc.waitFor() == 0 && log.contains("PASS profile_join_cardinality (8 rows)"), log)
+    } finally Seq(lake, staging, out).foreach(rmTree)
+  }
+
   test("equi-depth histogram: ~10% per bucket on continuous columns, counts reconcile") {
     val rows = Histogram.profileHistogram(spark, sf).collect()
     val byCol = rows.groupBy(r => (r.getAs[String]("table_name"), r.getAs[String]("column_name")))
