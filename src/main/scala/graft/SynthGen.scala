@@ -33,8 +33,10 @@ object SynthGen {
     val nVec = (20000 * sf).toLong.max(1)
 
     // ONE parquet file per table, exactly the fixture layout (the DuckDB
-    // oracle reads `<dir>/<table>.parquet` as a file; Spark still
-    // parallelizes a single file across row-group-aligned byte ranges)
+    // oracle reads `<dir>/<table>.parquet` as a file). Below the 128 MB
+    // row-group size the file is one row group, which parquet never
+    // splits: Spark plans several byte ranges over it, but one task reads
+    // every row, so operators fan out through `Tables.fanOut`
     def write(df: DataFrame, name: String): Unit = {
       val tmp = s"$out/_tmp_$name"
       df.coalesce(1).write.mode("overwrite").parquet(tmp)

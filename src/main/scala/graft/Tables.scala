@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Parquet table loaders for the driver-generated testdata layout
   * (`<dir>/<name>.parquet`). All operators take `(SparkSession, sfDir)` and
@@ -47,49 +49,40 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
-  /** Fan a SMALL-cardinality frame out to full parallelism before
-    * per-row-HEAVY work (gram explosion, per-token md5): the fixture's
-    * single-file parquet tables read as 1-2 partitions, so a downstream
-    * explode that multiplies row count ~300× runs on 1-2 cores no matter
-    * how many the session has — measured r13 at sf1: mm_dedup_phash's
-    * 19M-gram explosion took 45 s on the 2-partition scan and 5 s fanned
-    * out. Hash-partitioning by the eventual grouping key lets the
-    * post-explode keyed aggregate REUSE the exchange (no second
-    * shuffle). At 100 TB the input arrives pre-parallel and this narrow
-    * shuffle of the small frame is noise — the helper is cheap
-    * insurance, not a fixture hack: any lake can hand back a
-    * few-large-files table whose scan parallelism undershoots its
-    * per-row compute.
+  /** Hash-partitions `df` by `key` into `defaultParallelism` partitions
+    * when its scan cannot keep that many cores busy, and returns it
+    * unchanged otherwise. Call it before per-row-heavy work (an explode
+    * that multiplies rows, per-token hashing, a wide aggregate): that
+    * work runs at the parallelism of its input, whatever the session's.
+    *
+    * The rule reads the planned scan and runs no job. The splits that can
+    * carry rows number `min(input files, planned scan splits)`: parquet
+    * never splits a row group, so a file written as one row group (any
+    * file under the default 128 MB row-group size) is read by one task
+    * however many byte ranges Spark plans over it. A single-file table
+    * therefore fans out on any session of more than one core, while a
+    * lake whose scan already has enough splits is not shuffled again. A
+    * frame with no file scan (local data, a checkpoint) counts as zero
+    * splits and fans out.
+    *
+    * Keying by the downstream grouping key lets a keyed aggregate after
+    * the heavy step reuse this exchange when it is taken. Where that
+    * reuse pays for the exchange on any input (the doc-keyed pipelines of
+    * char entropy, SimHash, pHash and lexical diversity), the operator
+    * calls `repartition(shuffle partitions, key)` itself: a plan choice,
+    * not parallelism. The count matters, as AQE would coalesce a plain
+    * `repartition(key)` of a small input into one task.
     */
-  def fanOut(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism, key)
-
-  /** fanOut + persist for a table consumed by SEVERAL differently-pruned
-    * branches of one query (r14 optimization round): a bare fanOut feeds
-    * each branch its own full-or-partial-width exchange (column pruning
-    * makes the exchanges non-identical, so runtime exchange reuse cannot
-    * collapse them — measured 102 MB of shuffle for a 17 MB catalog in
-    * infer_constraints), while the persisted fan-out shuffles the table
-    * ONCE and every branch reads the cache. Only tables whose parquet
-    * footprint exceeds `minBytes` are fanned — fanning a 5-row dimension
-    * costs 32 task launches per consumer for nothing; at lake scale
-    * every real table passes the threshold and the cache behaves like
-    * the pre-parallel input a cluster hands back anyway (MEMORY_AND_DISK
-    * — LRU-evictable).
-    */
-  def tableFannedCached(s: SparkSession, d: String, name: String,
-      minBytes: Long = 1L << 20): DataFrame = {
-    val df = table(s, d, name)
-    val sz =
-      try java.nio.file.Files.size(java.nio.file.Paths.get(d, s"$name.parquet"))
-      catch { case _: Throwable => 0L }
-    if (sz < minBytes) df
-    else {
-      val key = df.schema.fields.headOption.map(f =>
-        org.apache.spark.sql.functions.col(f.name))
-      key.map(k => fanOut(df, k)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        .getOrElse(df)
+  def fanOut(df: DataFrame, key: Column): DataFrame = {
+    val n = df.sparkSession.sparkContext.defaultParallelism
+    val scans = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
     }
+    val splits = scans.collect {
+      case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+    }.sum
+    if (math.min(df.inputFiles.length, splits) >= n) df
+    else df.repartition(n, key)
   }
 }

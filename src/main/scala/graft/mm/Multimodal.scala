@@ -309,13 +309,9 @@ object Multimodal {
     * token structure at all.
     */
   def phashPairs(spark: SparkSession, dir: String): DataFrame = {
-    // fan the small doc frame out BEFORE the ~300×-multiplying gram
-    // explosion (Tables.fanOut scaladoc: 45 → 5 s at sf1 on the
-    // 2-partition single-file scan); keying by doc_id lets the
-    // signature aggregate reuse the exchange
-    val grams = Tables.fanOut(
-        Tables.documents(spark, dir).filter(length(col("text")) >= 4),
-        col("doc_id"))
+    // plan choice: the signature aggregate reuses this doc_id exchange
+    val grams = Tables.documents(spark, dir).filter(length(col("text")) >= 4)
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_id"))
       .select(col("doc_id"), explode(array_distinct(expr(
         "transform(sequence(1, length(text) - 3), i -> substring(text, i, 4))")))
         .as("g"))

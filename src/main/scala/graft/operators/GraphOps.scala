@@ -69,20 +69,22 @@ object GraphOps {
     * per SparkContext, not created per call — a fresh SessionState per
     * invocation re-paid catalog/file-listing setup on every bench run
     * (interleaved A/B at sf0.1×32c: 3.7 → 6.7-7.2 s median when a
-    * session was built per call). Only pagerank compiles on this
-    * session, so the toggle races with nothing; scale knobs (shuffle
-    * partitions — Bench sets them per core count at runtime, which
-    * newSession does NOT inherit) re-sync from the outer session on
-    * every call.
+    * session was built per call). Concurrent pagerank calls share this
+    * session, so the toggle (save, compile, restore) and the per-call
+    * re-sync of scale knobs from the outer session (shuffle partitions —
+    * Bench sets them per core count at runtime, which newSession does
+    * NOT inherit) each hold the session's lock.
     */
   @transient private var prSession: SparkSession = null
   private def pagerankSession(outer: SparkSession): SparkSession =
     synchronized {
       if (prSession == null || prSession.sparkContext != outer.sparkContext)
         prSession = outer.newSession()
-      for ((k, v) <- outer.conf.getAll
-           if k.startsWith("spark.sql.") && prSession.conf.isModifiable(k))
-        if (prSession.conf.get(k, null) != v) prSession.conf.set(k, v)
+      prSession.synchronized {
+        for ((k, v) <- outer.conf.getAll
+             if k.startsWith("spark.sql.") && prSession.conf.isModifiable(k))
+          if (prSession.conf.get(k, null) != v) prSession.conf.set(k, v)
+      }
       prSession
     }
 
@@ -132,14 +134,15 @@ object GraphOps {
     // pure extra edge shuffle), while the non-adaptive plan checkpoints
     // as hashpartitioning(src, N). N = spark.sql.shuffle.partitions,
     // the session's scale knob, not a local constant.
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val edgesDeg =
+    val edgesDeg = spark.synchronized {
+      val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
       try edgesCk
         .join(broadcast(deg), "src")
         .repartition(col("src"))
         .localCheckpoint(true)
       finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+    }
     free(edgesCk) // edgesDeg supersedes it; blocks freed before rounds
     val initU = unit / n
     val baseU = (unit - unit * dampingNum / dampingDen) / n

@@ -683,16 +683,10 @@ object Stats {
     */
   def statsSpearman(spark: SparkSession, dir: String): DataFrame = {
     val cs = spearmanCols
-    // r14 optimization round: the 3-column projection feeds the count,
-    // all three value-grid aggregates AND the final row-level join —
-    // persist it so lineitem is scanned once, and overlap the three
-    // independent grid→cumsum chains from driver futures (guide §2.6);
-    // Future.sequence keeps column order, so the joined frame and every
-    // downstream sum are unchanged.
-    // (fanned before the persist — r14: the cache otherwise materializes
-    // at the single-row-group scan's 1 partition and every grid
-    // aggregate reads it single-threaded; the heavy grid is near-unique
-    // l_extendedprice, so per-slice partial-agg dedup loss is nil)
+    // the 3-column projection feeds the count, all three value-grid
+    // aggregates and the final row-level join: persisted so lineitem is
+    // scanned once; the three independent grid→cumsum chains overlap
+    // from driver futures, and Future.sequence keeps column order
     val base = Tables.fanOut(
       Tables.lineitem(spark, dir)
         .select(cs.map(col): _*)

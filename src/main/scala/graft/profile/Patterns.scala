@@ -80,9 +80,7 @@ object Patterns {
     // (1) the raw char-class mask is a `translate` char map — identical
     //     to the [A-Z]/[a-z]/[0-9] regexp_replace battery on every
     //     string (both touch exactly the ASCII ranges), at a fraction
-    //     of the per-row cost on the single-row-group scan where the
-    //     fan-out fix measured a net LOSS (the shuffle cost more than
-    //     the regex saved — reverted, evidence in OPTIMIZATION_r14.md);
+    //     of the per-row cost;
     // (2) the 3-regex run-collapse moves BEHIND a group-by on the raw
     //     mask, so it runs once per DISTINCT raw mask, not once per
     //     row. The raw-mask partial aggregate collapses the corpus

@@ -94,12 +94,6 @@ object Profiler {
   }
 
   def profileLineitemApprox(spark: SparkSession, dir: String): DataFrame =
-    // r14 optimization round: single-row-group scan ⇒ the whole-table
-    // sketch pass (11 HLL + 8 KLL updates per row) ran on ONE core
-    // (~6 s isolated). Fan out first — HLL registers are max-merged
-    // (order-insensitive) and this key is rows-only by design with
-    // tolerance-asserted accuracy (ProfilerSpec), so partitioning is
-    // free to change.
     profileTableApprox(
       Tables.fanOut(Tables.lineitem(spark, dir), col("l_orderkey")))
 
@@ -386,11 +380,6 @@ object Profiler {
       struct(lit(corrCols(i)).as("col_x"), lit(corrCols(j)).as("col_y"),
         expr(corrRSql(corrIntDivSpark)(i, j)).as("corr_r"))
     }
-    // r14 optimization round: the fixture's single-row-group parquet
-    // reads as ONE scan task, so the 21-sum decimal aggregate ran
-    // single-threaded (~4.7 s isolated, 3 jobs / 5 tasks / 0 shuffle).
-    // Fan the scan out first (Tables.fanOut insurance): decimal sums are
-    // exact and order-independent, so partitioning cannot move a digit.
     Tables.fanOut(Tables.lineitem(spark, dir), col("l_orderkey"))
       .select(corrXk.zipWithIndex.map { case ((_, e), i) =>
         expr(e).as(s"xk_$i") }: _*)

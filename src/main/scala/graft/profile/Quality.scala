@@ -190,10 +190,6 @@ object Quality {
 
   def anomalyWith(spark: SparkSession, dir: String, sigma: Double): DataFrame = {
     val perTable = anomalyTargets.map { t =>
-      // r14 optimization round: both the moments pass and the outlier
-      // pass scan this table; fan the scan out (single-row-group parquet
-      // reads as one task) — decimal sums and outlier counts are
-      // order-independent, so partitioning cannot move a value
       val df = Tables.fanOut(Tables.table(spark, dir, t.table),
         col(t.cols.head._1))
       val statAggs = t.cols.flatMap { case (c, p) =>

@@ -69,12 +69,15 @@ object Referential {
     val idx = edges.zipWithIndex
     val childKeyed = idx.groupBy(_._1._1).toSeq.map { case (ct, es) =>
       val tbl = Tables.table(spark, dir, ct)
+      // null test on the raw column, as in auditEdge: a key whose cast
+      // yields null (ANSI off) is still a child row, and an orphan
       val eks = es.map { case ((_, cc, _, _), i) =>
-        struct(lit(i).as("eid"), col(cc).cast("long").as("k"))
+        struct(lit(i).as("eid"), col(cc).cast("long").as("k"),
+          col(cc).isNotNull.as("present"))
       }
       tbl.select(explode(array(eks: _*)).as("ek"))
+        .filter(col("ek.present"))
         .select(col("ek.eid").as("eid"), col("ek.k").as("k"))
-        .filter(col("k").isNotNull)
     }.reduce(_ unionByName _)
       .groupBy(col("eid"), col("k"))
       .agg(count(lit(1)).as("n_rows_key"))
@@ -97,7 +100,7 @@ object Referential {
     val meta = idx.map { case ((ct, cc, pt, pc), i) => (i, ct, cc, pt, pc) }
       .toDF("eid", "child_table", "child_column", "parent_table",
         "parent_column")
-    broadcast(meta)
+    meta
       .join(totals, Seq("eid"), "left_outer")
       .join(orphans, Seq("eid"), "left_outer")
       .select(col("child_table"), col("child_column"),

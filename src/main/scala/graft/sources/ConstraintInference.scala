@@ -267,18 +267,7 @@ object ConstraintInference {
     out.orderBy(col("table_name"), col("column_name"), col("kind"))
   }
 
-  /** SparkEntry operator: constraint candidates over the whole catalog.
-    * r14 optimization round, measured: fanning the EXACT path out was
-    * tried two ways (per-branch fanOut: 102 MB shuffle / 9.4 s;
-    * fan+persist once: 51 MB / 10.7 s) and both LOST to the single-task
-    * scan (4.8 s) — with one partition the family-distinct's partial
-    * aggregate dedupes across the whole table BEFORE the exchange, so
-    * the shuffle carries exactly |distinct| values; 32-way fanning
-    * restores parallelism but multiplies the exchange by the per-slice
-    * duplicate factor. The approx sibling keeps the fan-out (sketches
-    * are tiny regardless of partitioning and the HLL update CPU is the
-    * bottleneck there).
-    */
+  /** SparkEntry operator: constraint candidates over the whole catalog. */
   def inferConstraints(spark: SparkSession, dir: String): DataFrame =
     constraintsDf(Tables.all.map(t => t -> Tables.table(spark, dir, t)))
 
@@ -293,8 +282,10 @@ object ConstraintInference {
     * not_null/range row and a superset-of-exact unique candidate set.
     */
   def inferConstraintsApprox(spark: SparkSession, dir: String): DataFrame =
-    constraintsDf(Tables.all.map(t =>
-      t -> Tables.tableFannedCached(spark, dir, t)), approx = true)
+    constraintsDf(Tables.all.map { t =>
+      val df = Tables.table(spark, dir, t)
+      t -> Tables.fanOut(df, col(df.columns.head))
+    }, approx = true)
 
   /** Artifact embedding: per-table ConstraintInfo lists with
     * deterministic names (`<kind>_<table>_<column>`).

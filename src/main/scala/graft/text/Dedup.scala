@@ -85,10 +85,7 @@ object Dedup {
     * affect both engines identically, so parity is unconditional).
     */
   private[text] def shingleHashes(spark: SparkSession, dir: String): DataFrame = {
-    // fanOut (r14, found by the sf1 shingle-family ladder): the ~w×
-    // gram explode + per-gram md5 below otherwise runs at the SCAN's
-    // parallelism — a few-large-files documents table pins it to 1-2
-    // cores regardless of session size (the r13 phash/simhash class)
+    // doc_id key: the per-doc shingle counts reuse the exchange
     Tables.fanOut(Tables.documents(spark, dir), col("doc_id"))
       // hoist the tokenization: split() inside the transform lambda would
       // re-parse the text per element (O(tokens²) per doc — measured 9 s
@@ -1131,10 +1128,9 @@ object Dedup {
     * hamming distance.
     */
   def simhash(spark: SparkSession, dir: String): DataFrame = {
-    // fan out before the token explosion + per-token md5 (the
-    // Tables.fanOut under-parallel-scan insurance; doc_id keying feeds
-    // the signature agg's exchange)
-    val toks = Tables.fanOut(Tables.documents(spark, dir), col("doc_id"))
+    // plan choice: the signature aggregate reuses this doc_id exchange
+    val toks = Tables.documents(spark, dir)
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_id"))
       .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("tok"))
       .select(col("doc_id"),
         expr("cast(conv(substring(md5(tok), 1, 15), 16, 10) as bigint)").as("h"))
@@ -1283,12 +1279,8 @@ object Dedup {
   val dupGramN = 8
 
   def dupNgramCoverage(spark: SparkSession, dir: String): DataFrame = {
-    // fanOut + persist (r14, found by the sf1 shingle-family ladder):
-    // pre-fix this ran the ~w× gram explode + per-gram md5 at the
-    // scan's 1-2-core parallelism AND derived it TWICE (the
-    // doc-frequency branch and the per-doc join are both consumers) —
-    // >18 min at sf1 on one core; post-fix seconds-scale (the r13
-    // phash/simhash double-derivation class)
+    // pairs is persisted: the doc-frequency branch and the per-doc join
+    // both consume it
     val base = Tables.fanOut(Tables.documents(spark, dir), col("doc_id"))
       .select(col("doc_id"), col("source"),
         expr("filter(split(text, ' '), t -> t <> '')").as("toks"))

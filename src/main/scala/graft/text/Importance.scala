@@ -42,13 +42,8 @@ object Importance {
   val nBuckets = 4096
 
   /** Exploded (doc_id, lang, bucket) bigram rows — the shared base of
-    * the model counts and the per-doc scoring rollup.
-    * r14 optimization round: fanned out by doc_id before the ~tokens×
-    * bigram explode + per-bigram md5 (the shingleHashes discipline —
-    * single-row-group scans otherwise hash the whole corpus on one
-    * core; measured 13 s at sf1 for curation_select). doc_id keying
-    * colocates each doc's bigrams, so the per-doc rollup's partial
-    * aggregate dedupes exactly as in the single-partition case.
+    * the model counts and the per-doc scoring rollup, which reuses the
+    * fan-out's doc_id exchange.
     */
   private def bigramBuckets(docs: DataFrame): DataFrame =
     graft.Tables.fanOut(docs, col("doc_id"))

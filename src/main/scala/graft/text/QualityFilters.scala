@@ -209,21 +209,11 @@ object QualityFilters {
 
   def charEntropy(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    // r15 (guide §2/§2.4, the fanOut-family signature + one-exchange
-    // fusion): the per-char explode multiplies row count by text length
-    // and previously ran at the single-row-group scan's parallelism
-    // (Meter: 7 tasks total at 32 cores — a serial query); fanOut
-    // hash-partitions by doc_id first, so the explode runs wide AND
-    // hashpartitioning(doc_id) satisfies every downstream requirement —
-    // the (doc_id, ch) count, the per-doc window, and the final per-doc
-    // rollup all share that ONE exchange (3 exchanges + a join → 1
-    // exchange). The per-doc totals ride a window instead of a separate
-    // aggregate + join back: identical values (count/sum per doc_id),
-    // and each (doc, char) term is still quantized through
-    // DECIMAL(18,9) BEFORE the per-doc sum — the cross-engine
-    // determinism contract is untouched.
+    // plan choice: the (doc_id, ch) count, the per-doc window and the
+    // per-doc rollup all reuse this one doc_id exchange
     val wDoc = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
-    val chars = Tables.fanOut(Tables.documents(spark, dir), col("doc_id"))
+    val chars = Tables.documents(spark, dir)
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_id"))
       .select(col("doc_id"), explode(split(col("text"), "")).as("ch"))
       .filter(col("ch") =!= "")
       .groupBy(col("doc_id"), col("ch")).agg(count(lit(1)).as("c"))

@@ -35,10 +35,7 @@ object Search {
   val topN = 20
 
   private def toks(spark: SparkSession, dir: String): DataFrame =
-    // r14 optimization round: fan the doc scan out before the per-token
-    // explode (the shingleHashes fanOut discipline — the single-row-group
-    // scan otherwise tokenizes the whole corpus on one core); doc_id
-    // keying lets the per-doc rollups downstream reuse the exchange
+    // doc_id key: the per-doc rollups downstream reuse the exchange
     Tables.fanOut(Tables.documents(spark, dir), col("doc_id"))
       .select(col("doc_id"), explode(expr(
         "filter(split(text, ' '), t -> t <> '')")).as("token"))

@@ -366,12 +366,6 @@ object TextStats {
     * (the static side of StreamOps.nllGate). */
   private[graft] def unigramLp(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    // r14 optimization round, measured and left alone: fanning this scan
-    // out was tried and REGRESSED the nll family (deciles 0.94 → 1.66 s
-    // suite median, min-stable) — the token explode feeds a groupBy
-    // whose single-partition partial aggregate already collapses the
-    // corpus to |vocab| rows before the exchange; the fan-out added a
-    // full-corpus shuffle for parallelism the aggregate did not need.
     val vocab = Tables.documents(spark, dir)
       .select(explode(split(col("text"), " ")).as("token"))
       .filter(col("token") =!= "")
@@ -384,7 +378,6 @@ object TextStats {
   }
 
   private[text] def unigramScored(spark: SparkSession, dir: String): DataFrame = {
-    // (fanOut tried and reverted here too — see unigramLp's note)
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
       .filter(col("token") =!= "")
@@ -818,7 +811,9 @@ object TextStats {
     * |sources| rows; nothing touches data-sized rows after the rollups.
     */
   def lexicalDiversity(spark: SparkSession, dir: String): DataFrame = {
-    val wc = Tables.fanOut(Tables.documents(spark, dir), col("doc_id"))
+    // plan choice: both per-doc aggregates reuse this doc_id exchange
+    val wc = Tables.documents(spark, dir)
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_id"))
       .select(col("doc_id"), col("source"),
         explode(expr("filter(split(text, ' '), t -> t <> '')")).as("token"))
       .groupBy(col("doc_id"), col("source"), col("token"))
@@ -908,9 +903,6 @@ object TextStats {
 
   def skipgramPmi(spark: SparkSession, dir: String): DataFrame = {
     val w = skipgramWindow
-    // r14 optimization round: fan the doc scan out before the ~window×
-    // tokens pair explode (the shingleHashes fanOut discipline — the
-    // single-row-group scan otherwise runs the explode on one core)
     val toks = Tables.fanOut(Tables.documents(spark, dir), col("doc_id"))
       .select(expr("filter(split(text, ' '), x -> x <> '')").as("t"))
       .filter(size(col("t")) >= 2)

@@ -225,4 +225,39 @@ class EdgeCaseSpec extends AnyFunSuite {
     // an empty panel, not a division by zero
     assert(text.TextStats.lexicalDiversity(spark, dir).collect().isEmpty)
   }
+
+  /** Repartition-by-number exchanges in a frame's physical plan. */
+  private def repartitions(df: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM => e
+    }.size
+  }
+
+  test("fanOut shuffles a single-file scan and leaves a scan of enough files as it is") {
+    import org.apache.spark.sql.functions.col
+    val n = spark.sparkContext.defaultParallelism
+    assume(n > 1, "one core: no scan is under-parallel")
+    val key = col("l_orderkey")
+    assert(repartitions(Tables.fanOut(Tables.lineitem(spark, TestSession.sf), key)) == 1)
+
+    // lineitem as 2 × defaultParallelism files, read through a file: URI
+    val tmp = Files.createTempDirectory("graft_fanout")
+    try {
+      Tables.lineitem(spark, TestSession.sf).repartition(2 * n)
+        .write.parquet(tmp.resolve("lineitem.parquet").toString)
+      val dir = s"file:$tmp"
+      val lake = Tables.lineitem(spark, dir)
+      assert(lake.inputFiles.length == 2 * n)
+      assert(repartitions(Tables.fanOut(lake, key)) == 0)
+      // exact decimal sums: the partitioning cannot move a digit
+      assert(profile.Profiler.profileCorrelations(spark, dir).collect().toSeq ==
+        profile.Profiler.profileCorrelations(spark, TestSession.sf).collect().toSeq)
+    } finally {
+      val tree = Files.walk(tmp)
+      try tree.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
+      finally tree.close()
+    }
+  }
 }

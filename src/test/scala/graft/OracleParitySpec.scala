@@ -30,9 +30,14 @@ class OracleParitySpec extends AnyFunSuite {
     val log = scala.io.Source.fromInputStream(proc.getInputStream).mkString
     val code = proc.waitFor()
     val fails = log.linesIterator.filter(_.startsWith("FAIL")).toSeq
+    // the dump is kept only when the check fails, for inspection
     assert(code == 0 && fails.isEmpty,
-      s"oracle_check.py exit $code:\n${fails.mkString("\n")}\n" +
+      s"oracle_check.py exit $code (dump kept at $out):\n${fails.mkString("\n")}\n" +
         log.linesIterator.toSeq.takeRight(2).mkString("\n"))
+    val tree = java.nio.file.Files.walk(java.nio.file.Paths.get(out))
+    try tree.sorted(java.util.Comparator.reverseOrder())
+      .forEach(f => java.nio.file.Files.delete(f))
+    finally tree.close()
   }
 
   /** SHA-256 of the sorted names, newline-joined. A deliberate change to

@@ -110,6 +110,48 @@ class ReferentialHistSpec extends AnyFunSuite {
     } finally Seq(lake, staging, out).foreach(rmTree)
   }
 
+  test("quality_referential carries no join hint") {
+    import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+    val plan = Referential.qualityReferential(spark, sf).queryExecution.analyzed
+    assert(plan.collect { case h: ResolvedHint => h }.isEmpty)
+  }
+
+  test("fused referential audit counts a key whose cast yields null, as auditEdge does") {
+    import java.nio.file.{Files, Paths}
+    // sf0.001 with orders.o_custkey as a string column holding one
+    // non-numeric value; the other tables are links to the fixture files.
+    // Under ANSI casts (the default) that value throws; without them its
+    // cast yields null.
+    val lake = Files.createTempDirectory("string_custkey")
+    val lenient = spark.newSession()
+    lenient.conf.set("spark.sql.ansi.enabled", "false")
+    try {
+      Tables.all.filter(_ != "orders").foreach(t =>
+        Files.createSymbolicLink(lake.resolve(s"$t.parquet"), Paths.get(sf, s"$t.parquet")))
+      val orders = Tables.orders(spark, sf)
+      val k0 = orders.agg(min(col("o_orderkey"))).head.get(0)
+      orders.withColumn("o_custkey", when(col("o_orderkey") === lit(k0), lit("x"))
+          .otherwise(col("o_custkey").cast("string")))
+        .write.parquet(lake.resolve("orders.parquet").toString)
+      val dir = lake.toString
+
+      val counts = Seq("n_child_rows", "n_child_keys", "n_orphan_keys", "n_orphan_rows")
+        .map(col)
+      val fused = Referential.qualityReferential(lenient, dir)
+        .filter(col("child_table") === "orders" && col("child_column") === "o_custkey")
+        .select(counts: _*).collect()
+      val single = Referential.auditEdge(Tables.orders(lenient, dir), "o_custkey",
+        Tables.customer(lenient, dir), "c_custkey").select(counts: _*).collect()
+      assert(single.head.getAs[Long]("n_orphan_rows") == 1L)
+      assert(fused.toSeq == single.toSeq)
+    } finally {
+      // Files.walk does not follow the links, so only the links are deleted
+      val tree = Files.walk(lake)
+      try tree.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
+      finally tree.close()
+    }
+  }
+
   test("equi-depth histogram: ~10% per bucket on continuous columns, counts reconcile") {
     val rows = Histogram.profileHistogram(spark, sf).collect()
     val byCol = rows.groupBy(r => (r.getAs[String]("table_name"), r.getAs[String]("column_name")))
