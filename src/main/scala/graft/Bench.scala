@@ -63,6 +63,10 @@ object Bench {
       .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
   }
 
+  /** Classes Janino has compiled in this JVM (Spark's codegen metrics). */
+  private def compiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   private val DiskName = "^(vd[a-z]+|sd[a-z]+|nvme\\d+n\\d+|xvd[a-z]+)$".r
   private def diskTicks(): Long =
     try {
@@ -104,6 +108,7 @@ object Bench {
       // a query's own persisted frames live across its repeated runs —
       // `first` = cold, `median` = warm plan — but never across queries
       SharedArtifacts.clearBetweenQueries(spark)
+      val compiles0 = compiles()
       val times = (1 to nRuns).map { _ =>
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 } catch {
@@ -113,6 +118,10 @@ object Bench {
             -1.0
         }
       }
+      // queries_compiles: classes Janino compiled during this query's
+      // timed runs; nonzero after the warm-up means the generated-class
+      // cache evicted this query's classes (or its code is not stable)
+      val qCompiles = (compiles() - compiles0).toDouble
       val ok = times.filter(_ >= 0).sorted
       val median = if (ok.isEmpty) -1.0 else ok(ok.size / 2)
       val min = if (ok.isEmpty) -1.0 else ok.head
@@ -144,9 +153,9 @@ object Bench {
       qDiskPrev = qDiskNow; qGcPrev = qGcNow; qWallPrev = qWallNow
       qStatPrev = (qsT, qsS)
       (name, median, min, (times.size - ok.size).toDouble, first, loadavg1(),
-        qDisk, qGc, qSteal)
+        qDisk, qGc, qSteal, qCompiles)
     }
-    def fmt(f: ((String, Double, Double, Double, Double, Double, Double, Double, Double)) => Double): String =
+    def fmt(f: ((String, Double, Double, Double, Double, Double, Double, Double, Double, Double)) => Double): String =
       results.map { r => "\"" + r._1 + "\":" + f(r) }.mkString("{", ",", "}")
     // failures stay visible as -1 per query but must not reduce the total
     val total = results.map(_._2).filter(_ >= 0).sum
@@ -171,7 +180,7 @@ object Bench {
     val gcTotalSec = (gcMillis() - gcT0) / 1e3
     val loadJson = s"""{"start":$loadStart,"end":$loadEnd,"busy_frac":$busyFrac,"steal_frac":$stealFrac,"disk_busy_frac":$diskBusyFrac,"gc_sec":$gcTotalSec,"ncpu":$ncpu}"""
     val detail =
-      s"""{"metric":"total","value":$total,"unit":"sec","total_first":$totalFirst,"queries":${fmt(_._2)},"queries_min":${fmt(_._3)},"queries_first":${fmt(_._5)},"queries_fails":${fmt(_._4)},"queries_load":${fmt(_._6)},"queries_disk":${fmt(_._7)},"queries_gc":${fmt(_._8)},"queries_steal":${fmt(_._9)},"load":$loadJson,"runs":$nRuns,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","total_first":$totalFirst,"queries":${fmt(_._2)},"queries_min":${fmt(_._3)},"queries_first":${fmt(_._5)},"queries_fails":${fmt(_._4)},"queries_load":${fmt(_._6)},"queries_disk":${fmt(_._7)},"queries_gc":${fmt(_._8)},"queries_steal":${fmt(_._9)},"queries_compiles":${fmt(_._10)},"load":$loadJson,"runs":$nRuns,"sf":"$sfDir"}"""
     // Per-core-count detail file (r14 VERDICT #2): the driver runs the
     // bench at 32 AND at 8 cores back-to-back; a single bench_out.json
     // meant the second run overwrote the first run's per-query

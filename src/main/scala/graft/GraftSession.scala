@@ -21,8 +21,22 @@ import org.apache.spark.sql.SparkSession
   *    Read them as session-TZ timestamps instead (sessions pin UTC, so
   *    the stored micros pass through unchanged — the same value DuckDB's
   *    epoch_us sees).
+  *
+  * [[CodegenCacheEntries]] sizes Spark's generated-class cache. Spark's
+  * default of 100 entries is smaller than the classes one workload pass
+  * generates (a lake pass over collect, five TPC-H queries and
+  * profile_correlations makes 104 distinct classes, a curation pass
+  * 120), so Janino recompiled most of them on every repeat. 1000 covers
+  * either set with eight times the headroom; at about 26 KB of metaspace
+  * per generated class it bounds what the cache keeps alive to about
+  * 26 MB. The conf is static: Spark reads it once per JVM, when the
+  * first class is generated, so it takes effect in the first session a
+  * JVM builds. Every main and the test suite build that session here.
   */
 object GraftSession {
+  /** `spark.sql.codegen.cache.maxEntries`; fixed, not a caller option. */
+  val CodegenCacheEntries = 1000
+
   def apply(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
     val spark = SparkSession.builder()
       .master(master)
@@ -36,6 +50,7 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

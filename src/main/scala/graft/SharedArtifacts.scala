@@ -22,7 +22,7 @@ package graft
   *
   * [[materialized]] is that path: compute once per (appId, dir, content
   * fingerprint, name), write parquet under [[artifactRoot]], and hand
-  * every consumer a fresh `spark.read.parquet` frame. The cold
+  * every consumer a fresh `Tables.parquet` frame. The cold
   * derivation stays visible exactly as before: the FIRST consumer's
   * `queries_first` number carries the derivation + write; later
   * consumers pay only their own scan — the first-consumer-pays
@@ -154,27 +154,28 @@ object SharedArtifacts {
         p
       }
     }
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 
   /** Content fingerprint of `<dir>/<table>.parquet` (file OR directory of
-    * part files): every data file's (relative path, size, mtime) folded
-    * into one hash. Memo owners fold this into their keys so a table
-    * REWRITTEN under the same path within a session (Generate overwrites
-    * parquet; the test harness reuses dirs) invalidates the memo instead
-    * of serving stale artifacts to every downstream consumer — the one
-    * staleness hole the (applicationId, dir) key left open. Driver-side
-    * metadata walk only: O(files in one table), microseconds at catalog
-    * scale, never a data read.
+    * part files): `Tables.listingFingerprint` of it, listed through the
+    * session's Hadoop `FileSystem`, so hdfs://, s3a:// and other remote
+    * tables fingerprint as local ones do. Memo owners fold this into
+    * their keys so a table REWRITTEN under the same path within a session
+    * (Generate overwrites parquet; the test harness reuses dirs)
+    * invalidates the memo instead of serving stale artifacts to every
+    * downstream consumer — the one staleness hole the (applicationId,
+    * dir) key left open. Driver-side metadata listing only: O(files in
+    * one table), never a data read.
     *
     * The fingerprint COMPLEMENTS the dir in a memo key, never replaces
     * it: two dirs can share a fingerprint (a `cp -r`'d corpus preserves
-    * relative layout + sizes + mtimes; any table invisible to java.nio
-    * — hdfs://, s3a:// — degrades to the constant "absent"), so a
-    * fingerprint-only key would serve one corpus' artifact to another.
-    * Memo owners key on appId + dir + fingerprint ([[memoKey]]).
-    */
-  /** `table` names the SOURCE table the artifact derives from (r15: the
+    * relative layout + sizes + mtimes; a missing table reads as the
+    * constant "absent"), so a fingerprint-only key would serve one
+    * corpus' artifact to another. Memo owners key on appId + dir +
+    * fingerprint ([[memoKey]]).
+    *
+    * `table` names the SOURCE table the artifact derives from (r15: the
     * lsh-pairs artifact derives from `embeddings`, not `documents` — a
     * corpus rewrite that touches only embeddings must invalidate it, and
     * one that touches only documents must not).
@@ -182,26 +183,12 @@ object SharedArtifacts {
   def memoKey(spark: org.apache.spark.sql.SparkSession, dir: String,
       name: String, table: String = "documents"): String =
     spark.sparkContext.applicationId + ":" + name + ":" + dir + ":" +
-      tableFingerprint(dir, table)
+      tableFingerprint(spark, dir, table)
 
-  def tableFingerprint(dir: String, table: String): String = {
-    val root = java.nio.file.Paths.get(dir, s"$table.parquet")
-    if (!java.nio.file.Files.exists(root)) return "absent"
-    val sb = new StringBuilder
-    val stream = java.nio.file.Files.walk(root)
-    try {
-      stream.sorted().forEach { p =>
-        if (java.nio.file.Files.isRegularFile(p)) {
-          sb ++= root.relativize(p).toString
-          sb += ':'
-          sb ++= java.nio.file.Files.size(p).toString
-          sb += ':'
-          sb ++= java.nio.file.Files.getLastModifiedTime(p).toMillis.toString
-          sb += ';'
-        }
-      }
-    } finally stream.close()
-    java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(sb.result()).toLong & 0xffffffffL)
+  def tableFingerprint(spark: org.apache.spark.sql.SparkSession, dir: String,
+      table: String): String = {
+    val root = new org.apache.hadoop.fs.Path(dir, s"$table.parquet")
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    Tables.listingFingerprint(fs, fs.makeQualified(root))
   }
 }

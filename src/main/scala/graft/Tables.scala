@@ -1,8 +1,12 @@
 package graft
 
+import scala.util.hashing.MurmurHash3
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loaders for the driver-generated testdata layout
   * (`<dir>/<name>.parquet`). All operators take `(SparkSession, sfDir)` and
@@ -20,7 +24,71 @@ object Tables {
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else parquet(spark, s"$dir/$name.parquet")
+
+  private final case class SchemaMemo(confs: Map[String, String], listing: String,
+      schema: StructType)
+
+  private val schemaMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, SchemaMemo]()
+
+  /** Reads the parquet file or directory at `path` (any Hadoop
+    * `FileSystem` URI) without inferring its schema again when nothing
+    * that decides it has changed. Spark's inference launches one job per
+    * read, even for a single file, and a library caller reads the same
+    * tables on every call.
+    *
+    * The memo holds one entry per qualified path: the session's parquet
+    * read confs (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`), the
+    * [[listingFingerprint]] of the path, and the schema Spark inferred. A
+    * read whose confs and listing match the entry passes that schema to
+    * the reader and starts no job; any other read (first read, a file
+    * added, removed or rewritten, a conf changed) infers as Spark does
+    * and replaces the entry (a path that does not list, such as a glob,
+    * always infers). File sources make every column nullable, so
+    * `df.schema` is the same either way. Thread-safe: concurrent readers
+    * of one path at worst both infer.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val hp = new Path(path)
+    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
+    val qualified = fs.makeQualified(hp)
+    val confs = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }
+    val listing = listingFingerprint(fs, qualified)
+    val key = qualified.toString
+    Option(schemaMemo.get(key)).filter(m => m.confs == confs && m.listing == listing) match {
+      case Some(m) => spark.read.schema(m.schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        if (listing != Absent) schemaMemo.put(key, SchemaMemo(confs, listing, df.schema))
+        df
+    }
+  }
+
+  private val Absent = "absent"
+
+  /** Content fingerprint of the file or directory tree at the qualified
+    * path `root`: one recursive Hadoop `FileSystem` listing, every file's
+    * (path relative to `root`, length, modification time) sorted and
+    * folded into a 64-bit hash, or `"absent"` when `root` does not exist.
+    * Driver-side metadata only, never a data read; it works on any
+    * Hadoop file system, remote ones included.
+    */
+  private[graft] def listingFingerprint(fs: FileSystem, root: Path): String = {
+    val base = root.toUri.getPath
+    val files = Seq.newBuilder[String]
+    try {
+      val it = fs.listFiles(root, true)
+      while (it.hasNext) {
+        val st = it.next()
+        files += s"${st.getPath.toUri.getPath.stripPrefix(base)}:${st.getLen}:${st.getModificationTime}"
+      }
+    } catch { case _: java.io.FileNotFoundException => return Absent }
+    val listing = files.result().sorted.mkString(";")
+    f"${MurmurHash3.stringHash(listing)}%08x${MurmurHash3.stringHash(listing, 0x2f5b1e3d)}%08x"
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
@@ -36,7 +104,7 @@ object Tables {
     * plain timestamp column.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    val raw = s.read.parquet(s"$d/events.parquet")
+    val raw = parquet(s, s"$d/events.parquet")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         // floor division (pmod trick), not `div` truncation: identical to

@@ -33,14 +33,16 @@ object Referential {
     ("events", "user_id", "customer", "c_custkey"))
 
   /** One edge's audit over arbitrary frames (spec plants orphan fixtures
-    * through this seam).
+    * through this seam). Keys compare as longs through `try_cast`, so a
+    * key that is not a number counts as a child row and an orphan under
+    * either ANSI setting.
     */
   private[graft] def auditEdge(child: DataFrame, childCol: String,
                                parent: DataFrame, parentCol: String): DataFrame = {
     val keyed = child.filter(col(childCol).isNotNull)
-      .groupBy(col(childCol).cast("long").as("k"))
+      .groupBy(col(childCol).try_cast("long").as("k"))
       .agg(count(lit(1)).as("n_rows_key"))
-    val parents = parent.select(col(parentCol).cast("long").as("k")).distinct()
+    val parents = parent.select(col(parentCol).try_cast("long").as("k")).distinct()
     val orphans = keyed.join(parents, Seq("k"), "left_anti")
       .agg(coalesce(count(lit(1)), lit(0L)).as("n_orphan_keys"),
         coalesce(sum(col("n_rows_key")), lit(0L)).as("n_orphan_rows"))
@@ -69,10 +71,11 @@ object Referential {
     val idx = edges.zipWithIndex
     val childKeyed = idx.groupBy(_._1._1).toSeq.map { case (ct, es) =>
       val tbl = Tables.table(spark, dir, ct)
-      // null test on the raw column, as in auditEdge: a key whose cast
-      // yields null (ANSI off) is still a child row, and an orphan
+      // null test on the raw column, as in auditEdge: a key whose
+      // try_cast yields null (a string key holding "x") is still a child
+      // row, and an orphan, under ANSI casts or without them
       val eks = es.map { case ((_, cc, _, _), i) =>
-        struct(lit(i).as("eid"), col(cc).cast("long").as("k"),
+        struct(lit(i).as("eid"), col(cc).try_cast("long").as("k"),
           col(cc).isNotNull.as("present"))
       }
       tbl.select(explode(array(eks: _*)).as("ek"))
@@ -84,7 +87,7 @@ object Referential {
     val parents = idx.groupBy(_._1._3).toSeq.map { case (pt, es) =>
       val tbl = Tables.table(spark, dir, pt)
       val eks = es.map { case ((_, _, _, pc), i) =>
-        struct(lit(i).as("eid"), col(pc).cast("long").as("k"))
+        struct(lit(i).as("eid"), col(pc).try_cast("long").as("k"))
       }
       tbl.select(explode(array(eks: _*)).as("ek"))
         .select(col("ek.eid").as("eid"), col("ek.k").as("k"))

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
@@ -908,11 +908,29 @@ object Collector {
     finally pool.shutdownNow()
   }
 
+  /** The row count an observed sample job delivered, or None when it has
+    * not arrived within [[ObservedCountWaitSecs]]. Spark delivers observed
+    * metrics through a listener after the job ends, and delivers nothing
+    * when the optimizer removed the observation from the plan; the bounded
+    * wait keeps that case from hanging the survey (the caller counts
+    * instead).
+    */
+  private def observedCount(obs: Observation): Option[Long] =
+    try Some(scala.concurrent.Await.result(obs.future,
+      scala.concurrent.duration.Duration(ObservedCountWaitSecs, "s")).getLong(0))
+    catch { case _: java.util.concurrent.TimeoutException => None }
+
+  private val ObservedCountWaitSecs = 10L
+
   /** Collect the full artifact: schema, row counts, and a deterministic
     * sample per table under the chosen `strategy` (MostRecent: sampling
     * key descending; RandomDet: md5-of-key order; NoSample: metadata
-    * only). Per table: the schema read, one bounded top-k read and one
-    * count — no full materialization. Tables are collected concurrently
+    * only). One job per table: the bounded top-k read that takes the
+    * sample also counts the table's rows (an observed `count(1)`; the
+    * top-k reads every row, so the count is exact), with no full
+    * materialization. A separate count job runs only when that count is
+    * missing: under NoSample, after a failed or timed-out sample, or when
+    * the observation was not delivered. Tables are collected concurrently
     * on up to `defaultParallelism` driver threads and the artifact keeps
     * `source.tableNames` order; `throttleMs > 0` collects one table at a
     * time, pausing before each sample. A failing table degrades
@@ -955,8 +973,8 @@ object Collector {
           false
         }
       }
-    // tables are surveyed concurrently: each one's load (the schema job),
-    // sample and count are a handful of small jobs that are mostly
+    // tables are surveyed concurrently: each one's load (a schema job on
+    // a table's first read) and sample are small jobs that are mostly
     // scheduler latency, so overlapping tables fills the idle slots. A
     // throttled survey keeps the reference's politeness contract: one
     // table at a time, with the pause between tables.
@@ -1091,16 +1109,25 @@ object Collector {
           // inter-table throttle (reference throttle_ms): politeness
           // against a production source; 0 = off (the default)
           if (throttleMs > 0) Thread.sleep(throttleMs)
+          // the row count rides on the sample's job: each attempt
+          // observes count(1) under its top-k, which reads every row.
+          // The attempt that returns is the last one to set `observed`.
+          val observed = new java.util.concurrent.atomic.AtomicReference[Observation]()
           val (sample, status, warns) = strategy match {
             case SamplingStrategy.NoSample => (Nil, "skipped", Nil)
             case _ => sampleWithRetry(effSample, l =>
               withQueryTimeout(df.sparkSession.sparkContext, queryTimeoutSecs) {
-                df.orderBy(ordering).limit(l).collect().toSeq.map(r =>
-                  r.toSeq.map(v => if (v == null) "NULL" else v.toString))
+                val obs = Observation()
+                observed.set(obs)
+                df.observe(obs, count(lit(1)).as("n")).orderBy(ordering).limit(l)
+                  .collect().toSeq.map(r =>
+                    r.toSeq.map(v => if (v == null) "NULL" else v.toString))
               })
           }
+          val sampledCount =
+            if (status == "failed") None else Option(observed.get).flatMap(observedCount)
           val (cnt, status2, warns2) =
-            try (df.count(), status, warns)
+            try (sampledCount.getOrElse(df.count()), status, warns)
             catch { case e: Exception =>
               (-1L, "failed",
                 warns :+ s"count failed: ${e.getClass.getSimpleName}: ${e.getMessage}")

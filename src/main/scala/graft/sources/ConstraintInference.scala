@@ -164,7 +164,10 @@ object ConstraintInference {
     * only the plan changes.
     */
   private def statsForApprox(tables: Seq[(String, DataFrame)]): DataFrame =
-    tables.map { case (t, df) =>
+    tables.map { case (t, raw) =>
+      // the one per-row-heavy pass: fan out here, and only here (the enum
+      // domain pass is a small collect_set over the unfanned tables)
+      val df = Tables.fanOut(raw, col(raw.columns.head))
       val fields = df.schema.fields.filter(f => keyable(f.dataType))
       val aggs = count(lit(1)).as("n_rows") +: fields.flatMap { f =>
         val c = col(f.name)
@@ -282,10 +285,7 @@ object ConstraintInference {
     * not_null/range row and a superset-of-exact unique candidate set.
     */
   def inferConstraintsApprox(spark: SparkSession, dir: String): DataFrame =
-    constraintsDf(Tables.all.map { t =>
-      val df = Tables.table(spark, dir, t)
-      t -> Tables.fanOut(df, col(df.columns.head))
-    }, approx = true)
+    constraintsDf(Tables.all.map(t => t -> Tables.table(spark, dir, t)), approx = true)
 
   /** Artifact embedding: per-table ConstraintInfo lists with
     * deterministic names (`<kind>_<table>_<column>`).

@@ -72,4 +72,17 @@ class ConstraintSpec extends AnyFunSuite {
     assert(exactU.subsetOf(approxU),
       s"missed true uniques: ${exactU -- approxU}")
   }
+
+  test("approx variant fans each table out at most once") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    val walk = new AdaptiveSparkPlanHelper {}
+    val (_, plans) = SparkEvents.plans(spark) {
+      ConstraintInference.inferConstraintsApprox(spark, sf).collect()
+    }
+    val fans = plans.map(p => walk.collectWithSubqueries(p) {
+      case x: ShuffleExchangeExec if x.shuffleOrigin == REPARTITION_BY_NUM => x
+    }.size)
+    assert(fans.sum <= Tables.all.size, s"repartition exchanges per executed plan: $fans")
+  }
 }

@@ -116,15 +116,14 @@ class ReferentialHistSpec extends AnyFunSuite {
     assert(plan.collect { case h: ResolvedHint => h }.isEmpty)
   }
 
-  test("fused referential audit counts a key whose cast yields null, as auditEdge does") {
+  /** sf0.001 with orders.o_custkey as a string column holding one
+    * non-numeric value; the other tables are links to the fixture files.
+    * The fused audit and auditEdge must both count that key as a child
+    * row and an orphan on `session`.
+    */
+  private def stringKeyAudit(session: org.apache.spark.sql.SparkSession): Unit = {
     import java.nio.file.{Files, Paths}
-    // sf0.001 with orders.o_custkey as a string column holding one
-    // non-numeric value; the other tables are links to the fixture files.
-    // Under ANSI casts (the default) that value throws; without them its
-    // cast yields null.
     val lake = Files.createTempDirectory("string_custkey")
-    val lenient = spark.newSession()
-    lenient.conf.set("spark.sql.ansi.enabled", "false")
     try {
       Tables.all.filter(_ != "orders").foreach(t =>
         Files.createSymbolicLink(lake.resolve(s"$t.parquet"), Paths.get(sf, s"$t.parquet")))
@@ -137,11 +136,11 @@ class ReferentialHistSpec extends AnyFunSuite {
 
       val counts = Seq("n_child_rows", "n_child_keys", "n_orphan_keys", "n_orphan_rows")
         .map(col)
-      val fused = Referential.qualityReferential(lenient, dir)
+      val fused = Referential.qualityReferential(session, dir)
         .filter(col("child_table") === "orders" && col("child_column") === "o_custkey")
         .select(counts: _*).collect()
-      val single = Referential.auditEdge(Tables.orders(lenient, dir), "o_custkey",
-        Tables.customer(lenient, dir), "c_custkey").select(counts: _*).collect()
+      val single = Referential.auditEdge(Tables.orders(session, dir), "o_custkey",
+        Tables.customer(session, dir), "c_custkey").select(counts: _*).collect()
       assert(single.head.getAs[Long]("n_orphan_rows") == 1L)
       assert(fused.toSeq == single.toSeq)
     } finally {
@@ -150,6 +149,17 @@ class ReferentialHistSpec extends AnyFunSuite {
       try tree.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
       finally tree.close()
     }
+  }
+
+  test("fused referential audit counts a key whose cast yields null, as auditEdge does") {
+    val lenient = spark.newSession()
+    lenient.conf.set("spark.sql.ansi.enabled", "false")
+    stringKeyAudit(lenient)
+  }
+
+  test("the referential audit counts a non-numeric key under ANSI casts too") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    stringKeyAudit(spark)
   }
 
   test("equi-depth histogram: ~10% per bucket on continuous columns, counts reconcile") {

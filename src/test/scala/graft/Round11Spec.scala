@@ -58,8 +58,8 @@ class Round11Spec extends AnyFunSuite {
       "epsilon zeta eta theta"))
     val b = cloneCorpus(a)
     // the collision precondition: identical content fingerprints
-    assert(SharedArtifacts.tableFingerprint(a, "documents") ==
-      SharedArtifacts.tableFingerprint(b, "documents"),
+    assert(SharedArtifacts.tableFingerprint(spark, a, "documents") ==
+      SharedArtifacts.tableFingerprint(spark, b, "documents"),
       "clone must reproduce the fingerprint for this test to bite")
     // the fix: the memo key still distinguishes them
     assert(SharedArtifacts.memoKey(spark, a, "components") !=
@@ -76,7 +76,7 @@ class Round11Spec extends AnyFunSuite {
   test("a non-java.nio-visible dir cannot alias another via 'absent'") {
     // both fingerprints degrade to the shared "absent" sentinel; the
     // dir component keeps the keys distinct
-    assert(SharedArtifacts.tableFingerprint("/nonexistent/x", "documents")
+    assert(SharedArtifacts.tableFingerprint(spark, "/nonexistent/x", "documents")
       == "absent")
     assert(SharedArtifacts.memoKey(spark, "/nonexistent/x", "bpe-toks") !=
       SharedArtifacts.memoKey(spark, "/nonexistent/y", "bpe-toks"))

@@ -5,6 +5,20 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+/** The local file system under the `graftfs` scheme: a stand-in for a
+  * remote Hadoop file system that java.nio cannot resolve. */
+class SchemeOnlyFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  override def getUri: java.net.URI = java.net.URI.create("graftfs:///")
+  override def getScheme: String = "graftfs"
+  // plain statuses: the local ones read permissions through java.io.File,
+  // which takes only file: URIs
+  override def listStatus(p: Path): Array[FileStatus] = super.listStatus(p).map(plain)
+  override def getFileStatus(p: Path): FileStatus = plain(super.getFileStatus(p))
+  private def plain(s: FileStatus): FileStatus = new FileStatus(s.getLen, s.isDirectory,
+    s.getReplication, s.getBlockSize, s.getModificationTime, s.getPath)
+}
+
 /** Round-12 regression specs for the SharedArtifacts hardening:
   * per-memoKey locking (r11 VERDICT #5 — the object-level `synchronized`
   * serialized UNRELATED artifact derivations and blocked memo hits behind
@@ -96,6 +110,26 @@ class Round12Spec extends AnyFunSuite {
       fail("second consumer must memo-hit"); null
     }
     assert(second.count() == 1L)
+  }
+
+  test("a table on a non-local Hadoop file system fingerprints its content") {
+    // `graftfs://` is local storage behind its own scheme, so java.nio
+    // cannot see it: only a FileSystem listing notices the rewrite
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftfs.impl", classOf[SchemeOnlyFileSystem].getName)
+    val dir = "graftfs://" + Files.createTempDirectory("graft_scheme").toString
+    def writeEmbeddings(n: Int): Unit =
+      (1 to n).map(i => (i.toLong, Array(i.toFloat, 1f), "l"))
+        .toDF("vec_id", "embedding", "label")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    writeEmbeddings(3)
+    val before = SharedArtifacts.memoKey(spark, dir, "lsh-pairs", "embeddings")
+    assert(!before.endsWith(":absent"), before)
+    assert(Tables.embeddings(spark, dir).count() == 3L)
+    writeEmbeddings(4)
+    assert(SharedArtifacts.memoKey(spark, dir, "lsh-pairs", "embeddings") != before)
+    assert(Tables.embeddings(spark, dir).count() == 4L)
   }
 
   // -------------------------------------------------------------------

@@ -99,6 +99,35 @@ class Round9RefSpec extends AnyFunSuite {
     assert(tracker.getActiveJobIds.isEmpty, tracker.getActiveJobIds.toSeq)
   }
 
+  test("collect counts every table's rows exactly, in one job per table") {
+    // sf0.001, a 16-file copy of it, and an empty table
+    val split = Files.createTempDirectory("graft_split").toString
+    Tables.all.foreach(t => Tables.table(spark, sf, t).repartition(16)
+      .write.parquet(s"$split/$t.parquet"))
+    val empty = Files.createTempDirectory("graft_empty").toString
+    Tables.region(spark, sf).limit(0).write.parquet(s"$empty/region.parquet")
+    val emptySource = new TableSource {
+      def name: String = s"parquet:$empty"
+      def tableNames: Seq[String] = Seq("region")
+      def load(table: String): DataFrame = Tables.table(spark, empty, table)
+    }
+    val sources = Seq(new ParquetSource(spark, sf), new ParquetSource(spark, split),
+      emptySource)
+    for (source <- sources; strategy <- Seq(SamplingStrategy.MostRecent,
+        SamplingStrategy.RandomDet, SamplingStrategy.NoSample)) {
+      val a = Collector.collect(source, sampleSize = 3, strategy = strategy)
+      val counts = a.tables.map(t => t.name -> t.rowCount)
+      assert(counts == source.tableNames.map(t => t -> source.load(t).count()),
+        s"${source.name} ${strategy.strategyName}")
+    }
+    assert(Tables.region(spark, empty).count() == 0L)
+    // the tables' schemas are memoized by now: only the sample jobs run
+    val ps = new ParquetSource(spark, split)
+    val (a, jobs) = SparkEvents.jobs(spark)(Collector.collect(ps, sampleSize = 3))
+    assert(a.tables.forall(_.sampleStatus == "success"))
+    assert(jobs == ps.tableNames.size)
+  }
+
   test("concurrent and one-table-at-a-time collection give the same artifact") {
     val src = new ParquetSource(spark, sf)
     val at = "2026-01-01T00:00:00Z"
