@@ -117,6 +117,8 @@ object SharedArtifacts {
     * CALLER persisted before entering (e.g. the shared shingle frame
     * incremental ingest keeps probing) predate the snapshot and
     * survive; freeing is always correctness-neutral (caches rebuild).
+    * The written frame's schema seeds `Tables.parquet`'s memo (where it
+    * provably equals the inferred one), so the re-read starts no job.
     */
   def materialized(spark: org.apache.spark.sql.SparkSession, dir: String,
       name: String, table: String = "documents")
@@ -144,7 +146,9 @@ object SharedArtifacts {
             scala.util.hashing.MurmurHash3.stringHash(key).toLong
               & 0xffffffffL) + "_" + name + ".parquet").toString
         val before = spark.sparkContext.getPersistentRDDs.keySet
-        compute.write.mode("overwrite").parquet(p)
+        val frame = compute
+        frame.write.mode("overwrite").parquet(p)
+        Tables.rememberWritten(spark, p, frame.schema)
         val after = spark.sparkContext.getPersistentRDDs
         (after.keySet -- before).foreach { id =>
           after.get(id).filterNot(r => contains(r.id))

@@ -2,11 +2,11 @@ package graft
 
 import scala.util.hashing.MurmurHash3
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 
 /** Parquet table loaders for the driver-generated testdata layout
   * (`<dir>/<name>.parquet`). All operators take `(SparkSession, sfDir)` and
@@ -26,11 +26,23 @@ object Tables {
     if (name == "events") events(spark, dir)
     else parquet(spark, s"$dir/$name.parquet")
 
-  private final case class SchemaMemo(confs: Map[String, String], listing: String,
-      schema: StructType)
+  /** What decides the schema a parquet read infers: the session's
+    * parquet read confs and the [[listingFingerprint]] of the path. */
+  private final case class ReadState(confs: Map[String, String], listing: String)
 
   private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, SchemaMemo]()
+    new java.util.concurrent.ConcurrentHashMap[String, (ReadState, StructType)]()
+
+  /** The memo key of `path` (its qualified form) and its read state now. */
+  private def readState(spark: SparkSession, path: String): (String, ReadState) = {
+    val hp = new Path(path)
+    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
+    val qualified = fs.makeQualified(hp)
+    val confs = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }
+    (qualified.toString, ReadState(confs, listingFingerprint(fs, qualified)))
+  }
 
   /** Reads the parquet file or directory at `path` (any Hadoop
     * `FileSystem` URI) without inferring its schema again when nothing
@@ -50,22 +62,36 @@ object Tables {
     * of one path at worst both infer.
     */
   def parquet(spark: SparkSession, path: String): DataFrame = {
-    val hp = new Path(path)
-    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-    val qualified = fs.makeQualified(hp)
-    val confs = spark.conf.getAll.filter { case (k, _) =>
-      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
-    }
-    val listing = listingFingerprint(fs, qualified)
-    val key = qualified.toString
-    Option(schemaMemo.get(key)).filter(m => m.confs == confs && m.listing == listing) match {
-      case Some(m) => spark.read.schema(m.schema).parquet(path)
+    val (key, state) = readState(spark, path)
+    Option(schemaMemo.get(key)).filter(_._1 == state) match {
+      case Some((_, schema)) => spark.read.schema(schema).parquet(path)
       case None =>
         val df = spark.read.parquet(path)
-        if (listing != Absent) schemaMemo.put(key, SchemaMemo(confs, listing, df.schema))
+        if (state.listing != Absent) schemaMemo.put(key, (state, df.schema))
         df
     }
   }
+
+  /** Seeds the memo for the parquet files just written at `path` from
+    * `written`, the schema of the frame written there, so the first
+    * [[parquet]] read of them starts no job. It seeds only where that
+    * provably equals Spark's inference: the parquet writer stores the
+    * frame's schema in every file footer, inference returns that stored
+    * schema, and file sources make every column nullable. Only flat
+    * schemas of numbers, strings, binary, booleans and dates are seeded;
+    * timestamps (the session's parquet confs decide how they read) and
+    * nested types are left to inference.
+    */
+  private[graft] def rememberWritten(spark: SparkSession, path: String,
+      written: StructType): Unit =
+    if (written.fields.forall(_.dataType match {
+          case _: NumericType | _: StringType | BinaryType | BooleanType | DateType => true
+          case _ => false
+        })) {
+      val (key, state) = readState(spark, path)
+      if (state.listing != Absent)
+        schemaMemo.put(key, (state, StructType(written.fields.map(_.copy(nullable = true)))))
+    }
 
   private val Absent = "absent"
 
@@ -75,17 +101,29 @@ object Tables {
     * folded into a 64-bit hash, or `"absent"` when `root` does not exist.
     * Driver-side metadata only, never a data read; it works on any
     * Hadoop file system, remote ones included.
+    *
+    * The walk calls `listStatus` on each directory, as Spark's own
+    * `InMemoryFileIndex` lists, and not `listFiles`: `listFiles` wraps
+    * every file in a `LocatedFileStatus`, whose constructor reads the
+    * file's permission, and without native Hadoop `RawLocalFileSystem`
+    * reads a permission by starting a shell command, one process per
+    * file. Both calls see the same files (`ChecksumFileSystem` hides its
+    * `.crc` files from either), so the fingerprint is the one
+    * `listFiles` gives.
     */
   private[graft] def listingFingerprint(fs: FileSystem, root: Path): String = {
     val base = root.toUri.getPath
     val files = Seq.newBuilder[String]
-    try {
-      val it = fs.listFiles(root, true)
-      while (it.hasNext) {
-        val st = it.next()
+    def walk(statuses: Array[FileStatus]): Unit = statuses.foreach { st =>
+      if (st.isFile)
         files += s"${st.getPath.toUri.getPath.stripPrefix(base)}:${st.getLen}:${st.getModificationTime}"
-      }
-    } catch { case _: java.io.FileNotFoundException => return Absent }
+      else
+        // a directory removed mid-walk is skipped, as listFiles skips it
+        try walk(fs.listStatus(st.getPath))
+        catch { case _: java.io.FileNotFoundException => }
+    }
+    try walk(fs.listStatus(root))
+    catch { case _: java.io.FileNotFoundException => return Absent }
     val listing = files.result().sorted.mkString(";")
     f"${MurmurHash3.stringHash(listing)}%08x${MurmurHash3.stringHash(listing, 0x2f5b1e3d)}%08x"
   }

@@ -376,18 +376,22 @@ object Profiler {
         corrPairs.map { case (i, j) => expr(
           s"CAST(floor(sum(xk_$i * xk_$j) * 10000) AS DECIMAL(38,0))")
           .as(s"s_${i}_$j") }
-    val structs = corrPairs.map { case (i, j) =>
+    // one row per pair holding that pair's sums under the names of pair
+    // (0, 1), so a single corr_r expression serves all ten rows
+    val pairSums = corrPairs.map { case (i, j) =>
       struct(lit(corrCols(i)).as("col_x"), lit(corrCols(j)).as("col_y"),
-        expr(corrRSql(corrIntDivSpark)(i, j)).as("corr_r"))
+        col(s"b_$i").as("b_0"), col(s"b_$j").as("b_1"),
+        col(s"s_${i}_$i").as("s_0_0"), col(s"s_${j}_$j").as("s_1_1"),
+        col(s"s_${i}_$j").as("s_0_1"))
     }
     Tables.fanOut(Tables.lineitem(spark, dir), col("l_orderkey"))
       .select(corrXk.zipWithIndex.map { case ((_, e), i) =>
         expr(e).as(s"xk_$i") }: _*)
       .agg(aggs.head, aggs.tail: _*)
       .withColumn("dd", expr(corrLadderSql("n")))
-      .select(explode(array(structs: _*)).as("p"))
-      .select(col("p.col_x").as("col_x"), col("p.col_y").as("col_y"),
-        col("p.corr_r").as("corr_r"))
+      .select(col("n"), col("dd"), inline(array(pairSums: _*)))
+      .select(col("col_x"), col("col_y"),
+        expr(corrRSql(corrIntDivSpark)(0, 1)).as("corr_r"))
       .orderBy(col("col_x"), col("col_y"))
   }
 

@@ -136,10 +136,10 @@ object Referential {
   private[graft] def fanoutEdge(child: DataFrame, childCol: String,
                                 parent: DataFrame, parentCol: String): DataFrame = {
     val keyed = child.filter(col(childCol).isNotNull)
-      .groupBy(col(childCol).cast("long").as("k"))
+      .groupBy(col(childCol).try_cast("long").as("k"))
       .agg(count(lit(1)).as("n_children"))
     val parents = parent.filter(col(parentCol).isNotNull)
-      .select(col(parentCol).cast("long").as("k")).distinct()
+      .select(col(parentCol).try_cast("long").as("k")).distinct()
     parents.join(keyed, Seq("k"), "left_outer")
       .select(coalesce(col("n_children"), lit(0L)).as("n_children"))
       .agg(count(lit(1)).as("n_parents"),
@@ -164,7 +164,7 @@ object Referential {
     val childKeyed = idx.groupBy(_._1._1).toSeq.map { case (ct, es) =>
       val tbl = Tables.table(spark, dir, ct)
       val eks = es.map { case ((_, cc, _, _), i) =>
-        struct(lit(i).as("eid"), col(cc).cast("long").as("k"))
+        struct(lit(i).as("eid"), col(cc).try_cast("long").as("k"))
       }
       tbl.select(explode(array(eks: _*)).as("ek"))
         .select(col("ek.eid").as("eid"), col("ek.k").as("k"))
@@ -175,7 +175,7 @@ object Referential {
     val parents = idx.groupBy(_._1._3).toSeq.map { case (pt, es) =>
       val tbl = Tables.table(spark, dir, pt)
       val eks = es.map { case ((_, _, _, pc), i) =>
-        struct(lit(i).as("eid"), col(pc).cast("long").as("k"))
+        struct(lit(i).as("eid"), col(pc).try_cast("long").as("k"))
       }
       tbl.select(explode(array(eks: _*)).as("ek"))
         .select(col("ek.eid").as("eid"), col("ek.k").as("k"))

@@ -28,6 +28,23 @@ class LakeSpec extends AnyFunSuite {
     assert(total == Tables.events(spark, sf).count())
   }
 
+  test("the table fingerprint walks a day-partitioned layout and sees a nested rewrite") {
+    import org.apache.hadoop.fs.Path
+    val dir = Files.createTempDirectory("graft_lake_fp").toString
+    Lake.writeDailyAgg(spark, sf, dir)
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val q = fs.makeQualified(root)
+    val before = Tables.listingFingerprint(fs, q)
+    assert(before == ListFilesFingerprint(fs, q))
+    val day = new java.io.File(dir).listFiles().filter(_.getName.startsWith("day=")).minBy(_.getName)
+    val part = day.listFiles().filter(_.getName.endsWith(".parquet")).minBy(_.getName)
+    val bytes = Files.readAllBytes(part.toPath)
+    Files.write(part.toPath, bytes ++ bytes)
+    val rewritten = Tables.listingFingerprint(fs, q)
+    assert(rewritten != before && rewritten == ListFilesFingerprint(fs, q))
+  }
+
   test("bucketed tables co-locate the join: no exchange, no pre-join sort") {
     Lake.writeBucketed(spark, sf, buckets = 8)
     try {

@@ -385,6 +385,16 @@ class PlanInvariantSpec extends AnyFunSuite {
     assert(compiles - c1 == 0)
   }
 
+  test("profile_correlations generates corr_r once, not once per column pair") {
+    val df = SparkEntry.queries("profile_correlations")(spark, sf)
+    assert(df.collect().length == 10)
+    // whole-stage source on sf0.001, local[4]: 666,819 chars with one
+    // corr_r expression per pair, 262,387 with one for all ten pairs
+    val chars = org.apache.spark.sql.execution.debug
+      .codegenStringSeq(df.queryExecution.executedPlan).map(_._2.length).sum
+    assert(chars > 0 && chars < 350000, chars)
+  }
+
   test("a second read of an unchanged table starts no Spark job") {
     Tables.lineitem(spark, sf)
     val (li, jobs) = SparkEvents.jobs(spark)(Tables.lineitem(spark, sf))

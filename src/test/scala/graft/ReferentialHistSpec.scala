@@ -116,12 +116,11 @@ class ReferentialHistSpec extends AnyFunSuite {
     assert(plan.collect { case h: ResolvedHint => h }.isEmpty)
   }
 
-  /** sf0.001 with orders.o_custkey as a string column holding one
-    * non-numeric value; the other tables are links to the fixture files.
-    * The fused audit and auditEdge must both count that key as a child
-    * row and an orphan on `session`.
+  /** Runs `body` on the path of sf0.001 with orders.o_custkey as a
+    * string column holding one non-numeric value; the other tables are
+    * links to the fixture files.
     */
-  private def stringKeyAudit(session: org.apache.spark.sql.SparkSession): Unit = {
+  private def withStringCustkey(body: String => Unit): Unit = {
     import java.nio.file.{Files, Paths}
     val lake = Files.createTempDirectory("string_custkey")
     try {
@@ -132,8 +131,19 @@ class ReferentialHistSpec extends AnyFunSuite {
       orders.withColumn("o_custkey", when(col("o_orderkey") === lit(k0), lit("x"))
           .otherwise(col("o_custkey").cast("string")))
         .write.parquet(lake.resolve("orders.parquet").toString)
-      val dir = lake.toString
+      body(lake.toString)
+    } finally {
+      // Files.walk does not follow the links, so only the links are deleted
+      val tree = Files.walk(lake)
+      try tree.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
+      finally tree.close()
+    }
+  }
 
+  /** The fused audit and auditEdge must both count the non-numeric key
+    * as a child row and an orphan on `session`. */
+  private def stringKeyAudit(session: org.apache.spark.sql.SparkSession): Unit =
+    withStringCustkey { dir =>
       val counts = Seq("n_child_rows", "n_child_keys", "n_orphan_keys", "n_orphan_rows")
         .map(col)
       val fused = Referential.qualityReferential(session, dir)
@@ -143,13 +153,7 @@ class ReferentialHistSpec extends AnyFunSuite {
         Tables.customer(session, dir), "c_custkey").select(counts: _*).collect()
       assert(single.head.getAs[Long]("n_orphan_rows") == 1L)
       assert(fused.toSeq == single.toSeq)
-    } finally {
-      // Files.walk does not follow the links, so only the links are deleted
-      val tree = Files.walk(lake)
-      try tree.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
-      finally tree.close()
     }
-  }
 
   test("fused referential audit counts a key whose cast yields null, as auditEdge does") {
     val lenient = spark.newSession()
@@ -160,6 +164,26 @@ class ReferentialHistSpec extends AnyFunSuite {
   test("the referential audit counts a non-numeric key under ANSI casts too") {
     assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
     stringKeyAudit(spark)
+  }
+
+  test("join cardinality drops a non-numeric key under ANSI casts, as an orphan") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    def isCustkey(r: org.apache.spark.sql.Row) =
+      r.getAs[String]("child_table") == "orders" && r.getAs[String]("child_column") == "o_custkey"
+    val fixture = Referential.profileJoinCardinality(spark, sf).collect()
+    withStringCustkey { dir =>
+      val rows = Referential.profileJoinCardinality(spark, dir).collect()
+      assert(rows.length == Referential.edges.length)
+      assert(rows.filterNot(isCustkey).toSeq == fixture.filterNot(isCustkey).toSeq)
+      assert(rows.find(isCustkey).get.getAs[Long]("n_parents") ==
+        fixture.find(isCustkey).get.getAs[Long]("n_parents"))
+      // the single-edge form counts as if the order keyed "x" were absent
+      val orders = Tables.orders(spark, sf)
+      val k0 = orders.agg(min(col("o_orderkey"))).head.get(0)
+      def edge(child: org.apache.spark.sql.DataFrame) = Referential.fanoutEdge(child,
+        "o_custkey", Tables.customer(spark, sf), "c_custkey").collect().toSeq
+      assert(edge(Tables.orders(spark, dir)) == edge(orders.filter(col("o_orderkey") =!= lit(k0))))
+    }
   }
 
   test("equi-depth histogram: ~10% per bucket on continuous columns, counts reconcile") {

@@ -15,8 +15,51 @@ class SchemeOnlyFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   // which takes only file: URIs
   override def listStatus(p: Path): Array[FileStatus] = super.listStatus(p).map(plain)
   override def getFileStatus(p: Path): FileStatus = plain(super.getFileStatus(p))
-  private def plain(s: FileStatus): FileStatus = new FileStatus(s.getLen, s.isDirectory,
+  protected def plain(s: FileStatus): FileStatus = new FileStatus(s.getLen, s.isDirectory,
     s.getReplication, s.getBlockSize, s.getModificationTime, s.getPath)
+}
+
+/** The local file system under the `countfs` scheme, whose statuses count
+  * every read of a permission, owner or group: reads that a local file
+  * system without native Hadoop answers by starting a process per file. */
+class PermissionCountingFileSystem extends SchemeOnlyFileSystem {
+  import org.apache.hadoop.fs.FileStatus
+  import org.apache.hadoop.fs.permission.FsPermission
+  import PermissionCountingFileSystem.reads
+  override def getUri: java.net.URI = java.net.URI.create("countfs:///")
+  override def getScheme: String = "countfs"
+  override protected def plain(s: FileStatus): FileStatus = {
+    val p = super.plain(s)
+    new FileStatus(p) {
+      override def getPermission: FsPermission = { reads.incrementAndGet(); super.getPermission }
+      override def getOwner: String = { reads.incrementAndGet(); super.getOwner }
+      override def getGroup: String = { reads.incrementAndGet(); super.getGroup }
+    }
+  }
+}
+
+object PermissionCountingFileSystem {
+  val reads = new java.util.concurrent.atomic.AtomicLong
+}
+
+/** The table fingerprint as Hadoop's `FileSystem.listFiles` walk gives
+  * it: the reference the `listStatus` walk must reproduce. */
+object ListFilesFingerprint {
+  import org.apache.hadoop.fs.{FileSystem, Path}
+  def apply(fs: FileSystem, root: Path): String = {
+    val base = root.toUri.getPath
+    val files = Seq.newBuilder[String]
+    try {
+      val it = fs.listFiles(root, true)
+      while (it.hasNext) {
+        val st = it.next()
+        files += s"${st.getPath.toUri.getPath.stripPrefix(base)}:${st.getLen}:${st.getModificationTime}"
+      }
+    } catch { case _: java.io.FileNotFoundException => return "absent" }
+    val listing = files.result().sorted.mkString(";")
+    import scala.util.hashing.MurmurHash3.stringHash
+    f"${stringHash(listing)}%08x${stringHash(listing, 0x2f5b1e3d)}%08x"
+  }
 }
 
 /** Round-12 regression specs for the SharedArtifacts hardening:
@@ -130,6 +173,82 @@ class Round12Spec extends AnyFunSuite {
     writeEmbeddings(4)
     assert(SharedArtifacts.memoKey(spark, dir, "lsh-pairs", "embeddings") != before)
     assert(Tables.embeddings(spark, dir).count() == 4L)
+  }
+
+  private lazy val sixteenFileLineitem: String = {
+    val dir = Files.createTempDirectory("graft_split16").toString
+    Tables.lineitem(spark, TestSession.sf).repartition(16)
+      .write.parquet(s"$dir/lineitem.parquet")
+    dir
+  }
+
+  test("a memo-hit read and a table fingerprint read no file's permission") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countfs.impl", classOf[PermissionCountingFileSystem].getName)
+    val dir = "countfs://" + sixteenFileLineitem
+    assert(Tables.lineitem(spark, dir).inputFiles.length == 16)
+    PermissionCountingFileSystem.reads.set(0)
+    val (li, jobs) = SparkEvents.jobs(spark)(Tables.lineitem(spark, dir))
+    assert(jobs == 0)
+    val fingerprint = SharedArtifacts.tableFingerprint(spark, dir, "lineitem")
+    assert(PermissionCountingFileSystem.reads.get == 0L)
+    assert(fingerprint != "absent")
+    assert(li.count() == Tables.lineitem(spark, TestSession.sf).count())
+  }
+
+  test("the listStatus fingerprint equals the listFiles one") {
+    import org.apache.hadoop.fs.Path
+    val hconf = spark.sessionState.newHadoopConf()
+    def same(path: String): Unit = {
+      val root = new Path(path)
+      val fs = root.getFileSystem(hconf)
+      val q = fs.makeQualified(root)
+      assert(Tables.listingFingerprint(fs, q) == ListFilesFingerprint(fs, q), path)
+    }
+    val sf = TestSession.sf
+    (Tables.all :+ "missing").foreach(t => same(s"$sf/$t.parquet"))
+    same(s"$sixteenFileLineitem/lineitem.parquet")
+    // a written artifact: part files, _SUCCESS and the local .crc files
+    import spark.implicits._
+    val artifact = SharedArtifacts.materialized(spark, mkCorpus(Seq("a b")), "r12_listing") {
+      (1 to 40).map(i => (i.toLong, s"t$i")).toDF("id", "tag").repartition(4)
+    }
+    val written = new Path(artifact.inputFiles.head).getParent
+    assert(new java.io.File(written.toUri.getPath).list().exists(_.endsWith(".crc")))
+    same(written.toString)
+  }
+
+  test("a freshly written artifact reads back without inferring, as Spark infers it") {
+    import graft.text.{BpeTrainer, Dedup}
+    // a new corpus path, so every artifact is derived and written here
+    val lake = Files.createTempDirectory("graft_seeded")
+    Tables.all.foreach(t => Files.createSymbolicLink(lake.resolve(s"$t.parquet"),
+      Paths.get(TestSession.sf, s"$t.parquet")))
+    val dir = lake.toString
+    // the source tables' schemas are memoized first: any inference left
+    // is an artifact's
+    Tables.all.foreach(t => Tables.table(spark, dir, t))
+    def inferences(sites: Seq[String]) = sites.filter(_.startsWith("parquet at Tables.scala"))
+    val artifacts = Seq(
+      "bpe-toks" -> (() => BpeTrainer.bpeTokensTable(spark, dir)),
+      "lsh-pairs" -> (() => graft.sim.Similarity.dedupEmbedding(spark, dir)),
+      "components" -> (() => Dedup.componentsTable(spark, dir)))
+    artifacts.foreach { case (name, derive) =>
+      val (df, sites) = SparkEvents.jobSites(spark)(derive())
+      val written = df.inputFiles.head
+      val path = written.substring(0, written.lastIndexOf('/'))
+      assert(path.endsWith(s"_$name.parquet"), path)
+      assert(inferences(sites).isEmpty, s"$name: $sites")
+      assert(Tables.parquet(spark, path).schema == spark.read.parquet(path).schema, name)
+    }
+    // a timestamp column is left to inference
+    import spark.implicits._
+    val (ts, sites) = SparkEvents.jobSites(spark)(
+      SharedArtifacts.materialized(spark, dir, "r12_timestamps") {
+        Seq((1L, java.sql.Timestamp.valueOf("2024-01-02 03:04:05"))).toDF("id", "ts")
+      })
+    assert(inferences(sites).size == 1, sites)
+    assert(ts.schema == spark.read.parquet(ts.inputFiles.head).schema)
   }
 
   // -------------------------------------------------------------------

@@ -1,7 +1,6 @@
 package graft
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -18,13 +17,20 @@ object SparkEvents {
 
   /** `body`'s result and the number of Spark jobs it started. */
   def jobs[A](spark: SparkSession)(body: => A): (A, Int) = {
+    val (a, sites) = jobSites(spark)(body)
+    (a, sites.size)
+  }
+
+  /** `body`'s result and the short call site of every Spark job it
+    * started (its stages' name), such as `parquet at Tables.scala:69`. */
+  def jobSites[A](spark: SparkSession)(body: => A): (A, Seq[String]) = {
     val sc = spark.sparkContext
-    val n = new AtomicInteger
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val marked = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty(Marker) != null)) marked.countDown()
-        else n.incrementAndGet()
+        else sites.add(e.stageInfos.headOption.fold("")(_.name))
     }
     sc.addSparkListener(listener)
     try {
@@ -32,7 +38,8 @@ object SparkEvents {
       sc.setLocalProperty(Marker, "1")
       try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(Marker, null)
       assert(marked.await(60, TimeUnit.SECONDS), "marker job event never arrived")
-      (a, n.get)
+      import scala.jdk.CollectionConverters._
+      (a, sites.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 
