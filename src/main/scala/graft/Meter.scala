@@ -7,8 +7,8 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * task / shuffle-byte counts via a SparkListener, plus wall seconds.
   * Scheduler round-trips (job count) are the latency driver for the many
   * sub-second queries in this suite — `.explain` can't show jobs launched
-  * during DataFrame CONSTRUCTION (eager localCheckpoints, zipWithIndex
-  * count passes, range-partitioner sampling), so this main counts them.
+  * during DataFrame CONSTRUCTION (eager localCheckpoints, rank offset
+  * passes, range-partitioner sampling), so this main counts them.
   *
   * Usage: runMain graft.Meter <sfDir> <query>[,query...] [nRuns]
   * Prints one line per query: name, wall_s, jobs, stages, tasks,

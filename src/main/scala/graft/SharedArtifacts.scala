@@ -64,6 +64,21 @@ object SharedArtifacts {
       .foreach(_.unpersist(blocking = false))
   }
 
+  /** Frees the blocks of a `localCheckpoint`ed frame, such as one round
+    * of an iterative op. `Dataset.unpersist` only reaches the
+    * CacheManager, while a checkpoint keeps its blocks in the RDD under
+    * each `LogicalRDD` leaf of the plan (the frame may be that leaf or a
+    * projection over it), so those RDDs are unpersisted. A frame with no
+    * such leaf is unpersisted through the CacheManager.
+    */
+  private[graft] def freeCheckpoint(df: org.apache.spark.sql.DataFrame): Unit = {
+    val rdds = df.queryExecution.analyzed.collectLeaves().collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }
+    if (rdds.nonEmpty) rdds.foreach(_.unpersist(blocking = false))
+    else df.unpersist()
+  }
+
   /** Where shared artifacts land. In production this is a lake path next
     * to the corpus (`<corpus>/_artifacts`) — here the corpus dirs are
     * read-only test fixtures, so the default is a session-scoped local

@@ -22,19 +22,10 @@ object Verify {
       // every query doesn't accumulate dead storage blocks
       SharedArtifacts.clearBetweenQueries(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    // keys sorted, so the file is diffable from one run to the next
+    // keys sorted, so the file is diffable from one run to the next; the
+    // JSON escape covers every control char, so a tab or CR in the SQL
+    // still parses
+    import graft.output.ArtifactJson.q
     val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -1,294 +1,172 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
-/** Distributed global ranking — the scale-safe replacement for
-  * `ntile(k).over(Window.orderBy(...))`. An empty-partitionBy window plans
-  * a SINGLE-partition WindowExec: every row of a data-sized frame funnels
-  * through one task's sort — the canonical scale-killer (the reference's
-  * sampling layer enforces the same "never sort the world" discipline,
-  * dbsurveyor postgres/sampling.rs).
+/** Distributed global ranks, prefix sums and order statistics — the
+  * scale-safe replacement for `rank`, `ntile` or `sum` over a
+  * `Window.orderBy(...)` with no partitionBy, which plans a
+  * single-partition WindowExec that funnels every row through one task.
   *
-  * Shape here: `repartitionByRange` on the sort key — the SAME sampled,
-  * fully parallel range exchange a global ORDER BY uses — then a
-  * per-partition sort, then `zipWithIndex`, which runs one lightweight
-  * count-job over the partitions and assigns contiguous per-partition
-  * offsets (bounded driver state: one Long per partition). Ranks are a
-  * pure function of the total order, so the sampled boundary placement
-  * cannot change the answer — callers must include a unique tiebreak
-  * column so the order IS total. The result is `localCheckpoint`ed (the
-  * repo's lineage discipline, as in BpeTrainer/GraphOps) so chained
-  * rankings and the downstream aggregate don't recompute the range
-  * exchange once per action.
+  * Every entry point runs one algorithm over a frame of n rows:
+  *  1. sort: `repartitionByRange(partsFor(n), keys)` — the sampled,
+  *     parallel range exchange a global ORDER BY uses — then
+  *     `sortWithinPartitions(keys)`. `partsFor(n)` is ceil(n / 65,536)
+  *     capped at the session's shuffle partitions;
+  *  2. fold: one job folds each partition's (row count, sum of an
+  *     optional LONG column) — one pair of driver state per partition;
+  *  3. offset: the exclusive scan of those pairs is each partition's
+  *     offset;
+  *  4. emit: each row gets offset + running value. A rank is the prefix
+  *     sum of 1, a cumsum the prefix sum of a LONG column, and
+  *     [[orderStats]] uses the offsets to collect only the rows at its
+  *     target ranks.
   *
-  * This is one of the rare justified `.rdd` drops: Spark exposes no
-  * declarative "global contiguous rank without a single-partition window"
-  * (SPARK-? zipWithIndex remains the idiomatic answer); everything before
-  * and after stays DataFrame/codegen.
+  * One-partition rule: at one partition every offset is 0, so there is
+  * no fold job (unless [[orderStats]] asks for a sum total), and the
+  * range exchange runs no sampling job.
+  *
+  * Persist rule: the sorted partitions are not persisted; the fold and
+  * the emit each read the exchange's shuffle output again and re-sort
+  * it. An entry point that counts its own input persists that input
+  * (unless the caller already cached it) for the count, the sampling and
+  * the exchange, and unpersists it once its result is materialized. Rank
+  * and cumsum frames come back `localCheckpoint`ed, so chained rankings
+  * and later actions do not recompute the exchange.
+  *
+  * Results are a pure function of the total order, so the sampled range
+  * bounds cannot change them; `keys` must end in a unique tiebreak so
+  * that the order IS total. The `.rdd` drop is deliberate: Spark has no
+  * declarative contiguous global rank without a single-partition window.
   */
 object GlobalRank {
 
-  /** Adds a 1-based contiguous global rank column under the given total
-    * order. `keys` must include a unique tiebreak (e.g. the entity key).
-    *
-    * r14 optimization round (guide §2.4 "remove shuffles outright" +
-    * §5 caching): the r13-shape call paid, per invocation, a
-    * RangePartitioner SAMPLING job that re-evaluated the caller's whole
-    * upstream plan (often a full scan + aggregate), then zipWithIndex's
-    * count job, then the eager localCheckpoint — the upstream lineage
-    * ran 2-3×. Now the input is persisted and counted ONCE (one upstream
-    * evaluation; the count doubles as the size probe), the exchange is
-    * sized from that count exactly like [[withGlobalRanks]] (ceil(n/64k)
-    * capped at session parallelism — a small aggregate frame sorts as
-    * ONE task and RangePartitioner SKIPS its sampling job entirely at 1
-    * partition, and zipWithIndex skips its count job at ≤1 partition;
-    * at cluster scale the cap restores full parallelism), and the input
-    * is unpersisted once the checkpoint is materialized. Ranks are a
-    * pure function of the total order, so partition sizing cannot change
-    * the result (the q_rfm fusion precedent, oracle-proven).
-    */
+  /** Adds a 1-based contiguous global rank column under `keys`. */
   def withGlobalRank(df: DataFrame, rankCol: String, keys: Column*): DataFrame =
-    rankImpl(df, rankCol, None, keys)
+    counted(df)((input, n) => withGlobalRanks(input, n, Seq(rankCol -> keys)))
 
-  /** Known-count variant: callers that have already materialized and
-    * counted the input (localCheckpoint + count for an ntile bound)
-    * pass n and skip the persist + count probe entirely.
-    */
-  def withGlobalRank(df: DataFrame, rankCol: String, n: Long,
+  /** Adds one rank column per (rankCol, keys) ordering to a frame of `n`
+    * rows, ranking each ordering in turn and checkpointing once. */
+  def withGlobalRanks(df: DataFrame, n: Long,
+      specs: Seq[(String, Seq[Column])]): DataFrame =
+    specs.foldLeft(df) { case (cur, (rankCol, keys)) =>
+      withPrefixSum(cur, n, keys, None, rankCol)
+    }.localCheckpoint()
+
+  /** Adds an inclusive global prefix sum of the LONG `valueCol` under
+    * `keys` — the replacement for `sum(x).over(Window.orderBy(...))`. */
+  def withGlobalCumsum(df: DataFrame, valueCol: String, cumCol: String,
       keys: Column*): DataFrame =
-    rankImpl(df, rankCol, Some(n), keys)
-
-  private def rankImpl(df: DataFrame, rankCol: String, nKnown: Option[Long],
-      keys: Seq[Column]): DataFrame = {
-    val spark = df.sparkSession
-    val weCache = nKnown.isEmpty &&
-      df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val input = if (weCache)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else df
-    val n = nKnown.getOrElse(input.count())
-    val parts = partsFor(spark, n)
-    val sorted = input.repartitionByRange(parts, keys: _*).sortWithinPartitions(keys: _*)
-    val schema = StructType(sorted.schema :+ StructField(rankCol, LongType, nullable = false))
-    val ranked = sorted.rdd.zipWithIndex().map { case (row, idx) =>
-      Row.fromSeq(row.toSeq :+ (idx + 1L))
+    counted(df) { (input, n) =>
+      withPrefixSum(input, n, keys, Some(valueCol), cumCol).localCheckpoint()
     }
-    val out = spark.createDataFrame(ranked, schema).localCheckpoint()
-    if (weCache) input.unpersist(blocking = false)
-    out
+
+  /** Exact order statistics without a ranked frame: returns (n, sum of
+    * `sumCol` over all rows (0 when None), rank → row) for the 1-based
+    * ranks `ranksFor(n)` under `keys`. Out-of-range ranks are ignored;
+    * n == 0 returns an empty map with no sort at all. Only the
+    * partitions that hold a target rank are read for the rows.
+    */
+  def orderStats(df: DataFrame, keys: Seq[Column], sumCol: Option[String],
+      ranksFor: Long => Seq[Long]): (Long, Long, Map[Long, Row]) =
+    counted(df) { (input, n) =>
+      if (n == 0L) (0L, 0L, Map.empty[Long, Row])
+      else {
+        val s = sortByRange(input, n, keys, sumCol)
+        val total = if (sumCol.isEmpty) 0L else s.scan.last._2
+        val before = s.offsets.map(_._1)
+        // rank r lives in the last partition p with before(p) < r
+        val byPid: Map[Int, Seq[Long]] = ranksFor(n).distinct
+          .filter(r => r >= 1L && r <= n)
+          .map { r => val p = before.lastIndexWhere(_ < r); (p, r - before(p)) }
+          .groupBy(_._1).map { case (p, rs) => p -> rs.map(_._2).sorted }
+        val found = if (byPid.isEmpty) Array.empty[Array[(Long, Row)]]
+          else s.rows.sparkContext.runJob(s.rows,
+          (ctx: org.apache.spark.TaskContext, it: Iterator[Row]) => {
+            val pid = ctx.partitionId()
+            val locals = byPid(pid)
+            val out = Array.newBuilder[(Long, Row)]
+            var i = 0L; var k = 0
+            while (it.hasNext && k < locals.length) {
+              val row = it.next(); i += 1L
+              if (i == locals(k)) { out += ((before(pid) + i, row)); k += 1 }
+            }
+            out.result()
+          },
+          byPid.keys.toSeq.sorted)
+        (n, total, found.flatten.toMap)
+      }
+    }
+
+  /** Runs `body` on `df` and its row count. An input the caller has not
+    * cached is persisted for the count and the sort that follows, and
+    * unpersisted once `body` has returned its materialized result.
+    */
+  private def counted[T](df: DataFrame)(body: (DataFrame, Long) => T): T = {
+    val weCache = df.storageLevel == StorageLevel.NONE
+    val input = if (weCache) df.persist(StorageLevel.MEMORY_AND_DISK) else df
+    try body(input, input.count())
+    finally if (weCache) input.unpersist(blocking = false)
   }
 
-  /** Size-aware rank-exchange partition count (shared by every rank /
-    * cumsum entry point): ceil(n / 64k) in [1, session parallelism].
+  /** Target rows per range partition: exact ranking is cheap per row,
+    * so the point is the lower bound (one partition for a small frame),
+    * not a cap on parallelism (that is the session's shuffle partitions).
     */
+  private val RowsPerRankPartition = 65536L
+
   private def partsFor(spark: org.apache.spark.sql.SparkSession, n: Long): Int = {
     val maxParts = spark.sessionState.conf.numShufflePartitions
     math.max(1L, math.min(maxParts.toLong,
       (n + RowsPerRankPartition - 1) / RowsPerRankPartition)).toInt
   }
 
-  /** FUSED multi-ordering rank assignment (r13 VERDICT #2 — the
-    * q_rfm_segmentation isolate): chaining three `withGlobalRank` calls
-    * paid, PER PASS, a range-sampling job + zipWithIndex's count job +
-    * an eager localCheckpoint job (~9 scheduler round-trips), which is
-    * what a loaded driver box inflates 4.5× (min≈median — latency, not
-    * compute). This fusion keeps the identical rank semantics (same
-    * sampled range exchange + per-partition sort + contiguous offsets
-    * per ordering — ranks are a pure function of each total order) but:
-    *
-    *   - sizes the exchange from the caller's known row count: a frame
-    *     of n rows gets ceil(n / 64k) partitions capped at the session
-    *     parallelism — a 15k-row per-customer frame becomes ONE
-    *     single-task sort per ordering (and RangePartitioner skips its
-    *     sampling job entirely at 1 partition) instead of 32 near-empty
-    *     tasks × 3 passes; at cluster scale the cap restores full
-    *     parallelism, so the adaptation is strictly about not
-    *     over-partitioning small aggregates;
-    *   - persists each pass's sorted RDD so the count pass and the next
-    *     ordering's exchange read it instead of recomputing the chain,
-    *     and localCheckpoints ONCE at the end (one materialization job
-    *     instead of three).
-    *
-    * `specs` = (rankCol, ordering keys) pairs; each ordering must embed
-    * a unique tiebreak, as in withGlobalRank.
+  /** Rows sorted into range partitions. `scan(p)` is the (rows, Σ column
+    * `sumIdx`, or 0 when it is -1) of the partitions before p, and its
+    * last entry the totals: the fold job, run when first read. `offsets`
+    * is the same scan, all zero and with no job at one partition.
     */
-  def withGlobalRanks(df: DataFrame, n: Long,
-      specs: Seq[(String, Seq[Column])]): DataFrame = {
-    val spark = df.sparkSession
-    val maxParts = spark.sessionState.conf.numShufflePartitions
-    val parts = math.max(1L, math.min(maxParts.toLong,
-      (n + RowsPerRankPartition - 1) / RowsPerRankPartition)).toInt
-    var cur = df
-    val persisted = scala.collection.mutable.ListBuffer
-      .empty[org.apache.spark.rdd.RDD[Row]]
-    for ((rankCol, keys) <- specs) {
-      val sorted = cur.repartitionByRange(parts, keys: _*)
-        .sortWithinPartitions(keys: _*)
-      val rdd = sorted.rdd
-      rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      persisted += rdd
-      val counts = rdd.mapPartitionsWithIndex { case (pid, it) =>
-        var c = 0L; it.foreach(_ => c += 1); Iterator((pid, c))
-      }.collect().sortBy(_._1).map(_._2)
-      val offsets = counts.scanLeft(0L)(_ + _)
-      val schema = StructType(sorted.schema :+
-        StructField(rankCol, LongType, nullable = false))
-      val ranked = rdd.mapPartitionsWithIndex { case (pid, it) =>
-        var r = offsets(pid)
-        it.map { row => r += 1; Row.fromSeq(row.toSeq :+ r) }
-      }
-      cur = spark.createDataFrame(ranked, schema)
+  private final class Sorted(val rows: RDD[Row], val schema: StructType,
+      val sumIdx: Int) {
+    lazy val scan: Array[(Long, Long)] = {
+      val idx = sumIdx
+      rows.mapPartitions { it =>
+        var c = 0L; var s = 0L
+        it.foreach { r => c += 1L; if (idx >= 0) s += r.getLong(idx) }
+        Iterator((c, s))
+      }.collect().scanLeft((0L, 0L)) { case ((c, s), (dc, ds)) => (c + dc, s + ds) }
     }
-    val out = cur.localCheckpoint()
-    persisted.foreach(_.unpersist(blocking = false))
-    out
+    def offsets: Array[(Long, Long)] =
+      if (rows.getNumPartitions == 1) Array((0L, 0L)) else scan
   }
 
-  /** Target rows per partition for the size-aware rank exchange: exact
-    * ranking is cheap per row, so 64k rows is a light task — the point
-    * is the LOWER bound (1 partition for small aggregates), not an
-    * upper bound on parallelism (capped at the session setting).
+  private def sortByRange(input: DataFrame, n: Long, keys: Seq[Column],
+      sumCol: Option[String]): Sorted = {
+    val sorted = input.repartitionByRange(partsFor(input.sparkSession, n), keys: _*)
+      .sortWithinPartitions(keys: _*)
+    new Sorted(sorted.rdd, sorted.schema, sumCol.fold(-1)(sorted.schema.fieldIndex))
+  }
+
+  /** `input` plus `outCol`: the running count (valueCol None) or running
+    * sum of `valueCol` under `keys`, each partition starting at its offset.
     */
-  private val RowsPerRankPartition = 65536L
-
-  /** Adds an inclusive global PREFIX SUM of `valueCol` (must be LONG)
-    * under the given total order — the scale-safe replacement for
-    * `sum(x).over(Window.orderBy(...))`, which plans the same
-    * single-partition WindowExec the rank case does. `keys` must include
-    * a unique tiebreak so the order is total.
-    *
-    * Shape: the identical sampled range exchange + per-partition sort as
-    * withGlobalRank, then the zipWithIndex two-pass device applied to
-    * SUMS instead of counts: pass 1 folds one Long per partition
-    * (bounded driver state — #partitions Longs), pass 2 streams each
-    * partition once adding its offset. Both passes read the SAME shuffle
-    * output (Spark reuses the exchange's files), so the data moves once.
-    * This is the primitive that makes exact global sequence packing /
-    * Lorenz accumulation legal at 100 TB: no task ever holds more than
-    * its partition, and the only driver state is the per-partition sum
-    * vector.
-    */
-  def withGlobalCumsum(df: DataFrame, valueCol: String, cumCol: String,
-      keys: Column*): DataFrame =
-    cumsumImpl(df, valueCol, cumCol, None, keys)
-
-  /** Known-count variant (see withGlobalRank's): skips persist + count. */
-  def withGlobalCumsum(df: DataFrame, valueCol: String, cumCol: String,
-      n: Long, keys: Column*): DataFrame =
-    cumsumImpl(df, valueCol, cumCol, Some(n), keys)
-
-  private def cumsumImpl(df: DataFrame, valueCol: String, cumCol: String,
-      nKnown: Option[Long], keys: Seq[Column]): DataFrame = {
-    val spark = df.sparkSession
-    // r14 optimization round: same persist + size-aware exchange as
-    // withGlobalRank (see its scaladoc) — one upstream evaluation, no
-    // sampling job at 1 partition, and the per-partition offset job is
-    // skipped outright when there is only one partition (offset 0).
-    val weCache = nKnown.isEmpty &&
-      df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val input = if (weCache)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else df
-    val n = nKnown.getOrElse(input.count())
-    val parts = partsFor(spark, n)
-    val sorted = input.repartitionByRange(parts, keys: _*).sortWithinPartitions(keys: _*)
-    val vIdx = sorted.schema.fieldIndex(valueCol)
-    val rdd = sorted.rdd
-    val offsets: Array[Long] =
-      if (parts <= 1) Array(0L)
-      else {
-        val partSums = rdd.mapPartitionsWithIndex { case (pid, it) =>
-          var s = 0L
-          it.foreach(r => s += r.getLong(vIdx))
-          Iterator((pid, s))
-        }.collect().sortBy(_._1).map(_._2)
-        partSums.scanLeft(0L)(_ + _) // offsets(pid) = Σ earlier partitions
-      }
-    val schema = StructType(sorted.schema :+ StructField(cumCol, LongType, nullable = false))
-    val summed = rdd.mapPartitionsWithIndex { case (pid, it) =>
+  private def withPrefixSum(input: DataFrame, n: Long, keys: Seq[Column],
+      valueCol: Option[String], outCol: String): DataFrame = {
+    val s = sortByRange(input, n, keys, valueCol)
+    val vIdx = s.sumIdx
+    val offsets = s.offsets.map(o => if (vIdx < 0) o._1 else o._2)
+    val out = s.rows.mapPartitionsWithIndex { (pid, it) =>
       var run = offsets(pid)
-      it.map { r => run += r.getLong(vIdx); Row.fromSeq(r.toSeq :+ run) }
-    }
-    val out = spark.createDataFrame(summed, schema).localCheckpoint()
-    if (weCache) input.unpersist(blocking = false)
-    out
-  }
-
-  /** Exact order statistics WITHOUT materializing a ranked frame
-    * (r14 optimization round). The rank-then-filter consumers
-    * (profile_shape_robust, profile_histogram, events_session_stats,
-    * events_conversion_lag) only ever read the rows at a handful of
-    * target ranks, yet the withGlobalRank path localCheckpointed the
-    * ENTIRE ranked frame (a Row conversion + storage write per input
-    * row) just to filter ~7-18 rows back out of it. This primitive
-    * sorts once (the same size-aware range exchange), folds ONE
-    * per-partition (count, sum) pass — bounded driver state, one pair
-    * per partition — and then collects ONLY the rows at the requested
-    * 1-based global ranks with a job over just the partitions that hold
-    * a target. Values at a rank are a pure function of the total order,
-    * exactly as for withGlobalRank, so results are unchanged.
-    *
-    * Returns (n, sum of `sumCol` over all rows (0 when None), rank →
-    * row). `ranksFor(n)` produces the wanted ranks once n is known;
-    * out-of-range ranks are ignored; n == 0 short-circuits to an empty
-    * map with no sort at all.
-    */
-  def orderStats(df: DataFrame, keys: Seq[Column], sumCol: Option[String],
-      ranksFor: Long => Seq[Long]): (Long, Long, Map[Long, Row]) = {
-    val spark = df.sparkSession
-    val weCache = df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val input = if (weCache)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else df
-    val n = input.count()
-    if (n == 0L) {
-      if (weCache) input.unpersist(blocking = false)
-      return (0L, 0L, Map.empty)
-    }
-    val parts = partsFor(spark, n)
-    val sorted = input.repartitionByRange(parts, keys: _*).sortWithinPartitions(keys: _*)
-    val sIdx: Option[Int] = sumCol.map(sorted.schema.fieldIndex)
-    val rdd = sorted.rdd
-    // both passes (count+sum, targeted collect) read the sorted rows —
-    // persist so the within-partition sort runs once, not per job
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stats = rdd.mapPartitionsWithIndex { case (pid, it) =>
-      var c = 0L; var s = 0L
-      it.foreach { r => c += 1L; sIdx.foreach(i => s += r.getLong(i)) }
-      Iterator((pid, c, s))
-    }.collect().sortBy(_._1)
-    val offsets = stats.map(_._2).scanLeft(0L)(_ + _)
-    val total = stats.map(_._3).sum
-    val wanted = ranksFor(n).distinct.filter(r => r >= 1L && r <= n).sorted
-    // rank r lives in partition p with offsets(p) < r <= offsets(p+1)
-    val byPid: Map[Int, Seq[Long]] = wanted
-      .map { r =>
-        val p = offsets.lastIndexWhere(_ < r) // offsets(0)=0 ⇒ p ≥ 0
-        (p, r - offsets(p)) // 1-based local index
+      it.map { r =>
+        run += (if (vIdx < 0) 1L else r.getLong(vIdx))
+        Row.fromSeq(r.toSeq :+ run)
       }
-      .groupBy(_._1).map { case (p, rs) => p -> rs.map(_._2).sorted }
-    val offsetsB = offsets
-    val results =
-      if (byPid.isEmpty) Array.empty[Array[(Long, Row)]]
-      else spark.sparkContext.runJob(
-        rdd,
-        (ctx: org.apache.spark.TaskContext, it: Iterator[Row]) => {
-          val pid = ctx.partitionId()
-          val locals = byPid(pid)
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Row)]
-          var i = 0L; var k = 0
-          while (it.hasNext && k < locals.length) {
-            val row = it.next(); i += 1L
-            if (i == locals(k)) { out += ((offsetsB(pid) + i, row)); k += 1 }
-          }
-          out.toArray
-        },
-        byPid.keys.toSeq.sorted)
-    rdd.unpersist(blocking = false)
-    if (weCache) input.unpersist(blocking = false)
-    (n, total, results.flatten.toMap)
+    }
+    input.sparkSession.createDataFrame(out,
+      StructType(s.schema :+ StructField(outCol, LongType, nullable = false)))
   }
 
   /** SQL-standard NTILE(k) as a closed-form expression over a contiguous

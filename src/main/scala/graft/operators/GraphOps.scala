@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.SharedArtifacts.freeCheckpoint
 
 /** Graph analytics over the trade graph the star schema implies:
   * customers and suppliers are nodes, an order line connects them.
@@ -90,10 +91,6 @@ object GraphOps {
 
   private[graft] def pageRankImpl(outerSession: SparkSession, dir: String,
       iters: Int, unrollMax: Int): DataFrame = {
-    def free(df: DataFrame): Unit =
-      df.queryExecution.analyzed.collectLeaves().collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach(_.unpersist(blocking = false))
     val spark = pagerankSession(outerSession)
     val pairs = tradePairs(spark, dir)
     val edges = pairs
@@ -143,7 +140,7 @@ object GraphOps {
         .localCheckpoint(true)
       finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
     }
-    free(edgesCk) // edgesDeg supersedes it; blocks freed before rounds
+    freeCheckpoint(edgesCk) // edgesDeg supersedes it; blocks freed before rounds
     val initU = unit / n
     val baseU = (unit - unit * dampingNum / dampingDen) / n
     // Bounded unroll, ONE action (r14.2): with iters a small fixed
@@ -174,7 +171,7 @@ object GraphOps {
       // replanning bill grows superlinearly with materialized stages
       for (_ <- 1 to iters) {
         val next = round(rank).localCheckpoint(true)
-        free(rank)
+        freeCheckpoint(rank)
         rank = next
       }
     }
@@ -185,9 +182,9 @@ object GraphOps {
       // TakeOrdered holds only 20 rows; materializing releases the
       // edge/degree blocks for freeing below
       .localCheckpoint(true)
-    free(rank) // no-op when unrolled; frees the last round's checkpoint
-    free(edgesDeg)
-    free(deg)
+    freeCheckpoint(rank) // no-op when unrolled; frees the last round's checkpoint
+    freeCheckpoint(edgesDeg)
+    freeCheckpoint(deg)
     out
   }
 
@@ -400,10 +397,6 @@ object GraphOps {
   val kcoreRounds = 8
 
   def kcoreQuery(spark: SparkSession, dir: String): DataFrame = {
-    def free(df: DataFrame): Unit =
-      df.queryExecution.analyzed.collectLeaves().collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach(_.unpersist(blocking = false))
     // LAZY checkpoint + count = ONE action per round (r15, the pagerank
     // device): the eager checkpoint job and the separate count were two
     // scheduler round-trips per round for the same materialization —
@@ -428,7 +421,7 @@ object GraphOps {
     for (_ <- 1 to kcoreRounds if !converged) {
       val next = peel(edges).localCheckpoint(false)
       val n = next.count()
-      free(edges)
+      freeCheckpoint(edges)
       edges = next
       converged = n == prev
       prev = n

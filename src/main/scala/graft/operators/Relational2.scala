@@ -81,7 +81,7 @@ object Relational2 {
     * Shape: one orders scan → per-customer agg (localCheckpointed:
     * counted once, ranked three ways); each dimension gets a
     * DISTRIBUTED global rank (GlobalRank: parallel range exchange +
-    * zipWithIndex — never a single-partition window) and the quintile
+    * partition offsets — never a single-partition window) and the quintile
     * falls out of the closed-form ntile(rank, n) arithmetic. Bit-exact
     * ntile semantics — the oracle keeps the literal `ntile` window —
     * with no data-sized WindowExec anywhere in the plan.
@@ -99,10 +99,6 @@ object Relational2 {
         sum(col("o_totalprice").cast(DecimalType(14, 2))).as("monetary_d"))
       .localCheckpoint()
     val n = perCust.count()
-    // r14: the three quintile rankings run through the FUSED device —
-    // one persisted sort chain, size-aware partitioning, one final
-    // checkpoint — instead of three eager zipWithIndex pipelines (the
-    // r13 driver-box 4.5× isolate was scheduler latency × job count)
     val ranked = GlobalRank.withGlobalRanks(perCust, n, Seq(
       ("r_rank", Seq(col("recency_days"), col("o_custkey"))),
       ("f_rank", Seq(col("frequency").desc, col("o_custkey"))),
@@ -144,7 +140,7 @@ object Relational2 {
     * measures the inequality itself).
     *
     * Shape: one orders scan → customer-sized agg → DISTRIBUTED decile
-    * assignment (GlobalRank: parallel range exchange + zipWithIndex +
+    * assignment (GlobalRank: parallel range exchange + rank offsets +
     * closed-form ntile arithmetic, custkey tiebreak — bit-stable decile
     * boundaries, no single-partition window) → 10-row rollup with a
     * 10-row cumulative window (aggregate-sized: benign). Shares in
@@ -158,7 +154,7 @@ object Relational2 {
       .localCheckpoint()
     val n = perCust.count()
     val deciled = GlobalRank
-      .withGlobalRank(perCust, "c_rank", n, col("spend_d"), col("o_custkey"))
+      .withGlobalRanks(perCust, n, Seq("c_rank" -> Seq(col("spend_d"), col("o_custkey"))))
       .withColumn("decile", GlobalRank.ntileFromRank(10, n, "c_rank"))
     deciled.groupBy(col("decile"))
       .agg(count(lit(1)).as("n_customers"),

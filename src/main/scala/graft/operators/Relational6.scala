@@ -268,7 +268,8 @@ object Relational6 {
         .localCheckpoint()
       val n = perCust.count()
       GlobalRank
-        .withGlobalRank(perCust, "c_rank", n, col("spend_d").desc, col("o_custkey"))
+        .withGlobalRanks(perCust, n,
+          Seq("c_rank" -> Seq(col("spend_d").desc, col("o_custkey"))))
         .withColumn("decile", GlobalRank.ntileFromRank(10, n, "c_rank"))
         .select(col("o_custkey"), col("decile"))
     }

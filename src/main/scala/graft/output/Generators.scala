@@ -1,7 +1,7 @@
 package graft.output
 
 import graft.sources.Collector
-import graft.sources.Collector.{Artifact, TableInfo}
+import graft.sources.Collector.{Artifact, ServerInfo, TableInfo}
 
 /** Shared generator helpers for the round-4 artifact surfaces. */
 private[output] object GenUtil {
@@ -16,6 +16,17 @@ private[output] object GenUtil {
         Some(s"sorted by (${l.sortColumns.mkString(", ")})") else None).flatten
     parts.mkString("; ")
   }.getOrElse("")
+
+  /** The "Collection run" summary (duration, access level,
+    * multi-database mode), or "" when none is known; `esc` escapes the
+    * access level for the target format.
+    */
+  def collectionRun(s: ServerInfo, esc: String => String): String = Seq(
+    if (s.collectionDurationMs >= 0) Some(s"duration ${s.collectionDurationMs} ms") else None,
+    if (s.accessLevel.nonEmpty) Some(s"access level ${esc(s.accessLevel)}") else None,
+    s.collectionMode.map(m => s"mode multi_database " +
+      s"(${m.discovered} discovered / ${m.collected} collected / ${m.failed} failed)")
+  ).flatten.mkString(", ")
 }
 
 /** Structured output writers — the Spark-side equivalent of the
@@ -38,7 +49,9 @@ object ArtifactJson {
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   }
-  private def q(s: String): String = "\"" + esc(s) + "\""
+  /** A JSON string literal: quotes, backslashes and every control char
+    * below 0x20 escaped. */
+  private[graft] def q(s: String): String = "\"" + esc(s) + "\""
 
   def render(a: Artifact): String = {
     def table(t: TableInfo): String = {
@@ -414,12 +427,8 @@ object HtmlDoc {
     a.server.foreach { s =>
       sb ++=
         s"<p>Engine: ${esc(s.engine)} ${esc(s.version)} &mdash; collected at ${esc(s.collectedAt)} &mdash; ${s.tableCount} tables</p>\n"
-      val run = Seq(
-        if (s.collectionDurationMs >= 0) Some(s"duration ${s.collectionDurationMs} ms") else None,
-        if (s.accessLevel.nonEmpty) Some(s"access level ${esc(s.accessLevel)}") else None,
-        s.collectionMode.map(m => s"mode multi_database " +
-          s"(${m.discovered} discovered / ${m.collected} collected / ${m.failed} failed)")).flatten
-      if (run.nonEmpty) sb ++= s"<p>Collection run: ${run.mkString(", ")}</p>\n"
+      val run = GenUtil.collectionRun(s, esc)
+      if (run.nonEmpty) sb ++= s"<p>Collection run: $run</p>\n"
     }
     sb ++= "<h2>Overview</h2>\n<table><tr><th>Table</th><th>Rows</th><th>Columns</th><th>Status</th><th>Sampling</th></tr>\n"
     a.tables.foreach(t => sb ++=
@@ -497,6 +506,13 @@ object HtmlDoc {
 
 object MarkdownDoc {
 
+  /** One table row: each cell has `|` escaped and every line break
+    * turned into a space, so no value can add a column or end the table.
+    */
+  private def row(cells: Any*): String =
+    cells.map(c => String.valueOf(c).replaceAll("\r\n|\r|\n", " ").replace("|", "\\|"))
+      .mkString("| ", " | ", " |\n")
+
   /** Markdown documentation: overview table + per-table sections with
     * column inventory and sample rows, mirroring `dbsurveyor generate
     * --format markdown`.
@@ -507,24 +523,20 @@ object MarkdownDoc {
     sb ++= s"Format version: ${a.formatVersion}\n\n"
     a.server.foreach { s =>
       sb ++= s"Engine: ${s.engine} ${s.version} — collected at ${s.collectedAt} — ${s.tableCount} tables\n\n"
-      val run = Seq(
-        if (s.collectionDurationMs >= 0) Some(s"duration ${s.collectionDurationMs} ms") else None,
-        if (s.accessLevel.nonEmpty) Some(s"access level ${s.accessLevel}") else None,
-        s.collectionMode.map(m => s"mode multi_database " +
-          s"(${m.discovered} discovered / ${m.collected} collected / ${m.failed} failed)")).flatten
-      if (run.nonEmpty) sb ++= s"Collection run: ${run.mkString(", ")}\n\n"
+      val run = GenUtil.collectionRun(s, identity)
+      if (run.nonEmpty) sb ++= s"Collection run: $run\n\n"
     }
     sb ++= "## Overview\n\n"
     sb ++= "| Table | Rows | Columns |\n| --- | --- | --- |\n"
-    a.tables.foreach(t =>
-      sb ++= s"| ${t.name} | ${t.rowCount} | ${t.columns.size} |\n")
+    a.tables.foreach(t => sb ++= row(t.name, t.rowCount, t.columns.size))
     sb ++= "\n"
     if (a.foreignKeys.nonEmpty) {
       sb ++= "## Relationships\n\n"
       sb ++= "| Child | Parent | Coverage | Likely FK | Provenance | On update | On delete |\n"
       sb ++= "| --- | --- | --- | --- | --- | --- | --- |\n"
       a.foreignKeys.foreach(f =>
-        sb ++= s"| ${f.childTable}.${f.childColumn} | ${f.parentTable}.${f.parentColumn} | ${f"${f.coverage}%.3f"} | ${f.likely} | ${f.provenance} | ${f.onUpdate} | ${f.onDelete} |\n")
+        sb ++= row(s"${f.childTable}.${f.childColumn}", s"${f.parentTable}.${f.parentColumn}",
+          f"${f.coverage}%.3f", f.likely, f.provenance, f.onUpdate, f.onDelete))
       sb ++= "\n"
     }
     if (a.routines.nonEmpty) {
@@ -533,15 +545,14 @@ object MarkdownDoc {
       a.routines.foreach { r =>
         val ps = r.parameters.map(p => s"${p.mode} ${p.name} ${p.dataType}")
           .mkString("; ")
-        sb ++= s"| ${r.name} | ${r.routineType} | $ps | ${r.returns} |\n"
+        sb ++= row(r.name, r.routineType, ps, r.returns)
       }
       sb ++= "\n"
     }
     if (a.customTypes.nonEmpty) {
       sb ++= "## Custom types\n\n"
       sb ++= "| Name | Kind | Class |\n| --- | --- | --- |\n"
-      a.customTypes.foreach(ct =>
-        sb ++= s"| ${ct.name} | ${ct.kind} | ${ct.className} |\n")
+      a.customTypes.foreach(ct => sb ++= row(ct.name, ct.kind, ct.className))
       sb ++= "\n"
     }
     a.tables.foreach { t =>
@@ -563,7 +574,7 @@ object MarkdownDoc {
       sb ++= "| Column | Type | Nullable | Default |\n| --- | --- | --- | --- |\n"
       t.columns.foreach { c =>
         val d = if (c.autoIncrement) "IDENTITY" else c.defaultValue
-        sb ++= s"| ${c.name} | ${c.dataType} | ${c.nullable} | $d |\n"
+        sb ++= row(c.name, c.dataType, c.nullable, d)
       }
       val sens = t.columns.filter(_.sensitive.nonEmpty)
       if (sens.nonEmpty) {
@@ -573,25 +584,24 @@ object MarkdownDoc {
       }
       if (t.indexes.nonEmpty) {
         sb ++= "\n### Indexes\n\n| Name | Columns | Unique |\n| --- | --- | --- |\n"
-        t.indexes.foreach(ix =>
-          sb ++= s"| ${ix.name} | ${ix.columns.mkString(", ")} | ${ix.unique} |\n")
+        t.indexes.foreach(ix => sb ++= row(ix.name, ix.columns.mkString(", "), ix.unique))
       }
       if (t.constraints.nonEmpty) {
         sb ++= "\n### Constraints\n\n| Kind | Columns | Detail | Provenance |\n| --- | --- | --- | --- |\n"
         t.constraints.foreach(c =>
-          sb ++= s"| ${c.kind} | ${c.columns.mkString(", ")} | ${c.detail.replace("|", "\\|")} | ${c.provenance} |\n")
+          sb ++= row(c.kind, c.columns.mkString(", "), c.detail, c.provenance))
       }
       if (t.triggers.nonEmpty) {
         sb ++= "\n### Triggers\n\n| Name | Timing | Event | Orientation | Definition |\n| --- | --- | --- | --- | --- |\n"
         t.triggers.foreach(tr =>
-          sb ++= s"| ${tr.name} | ${tr.timing} | ${tr.event} | ${tr.orientation} | ${tr.definition.replaceAll("\\s+", " ").replace("|", "\\|")} |\n")
+          sb ++= row(tr.name, tr.timing, tr.event, tr.orientation,
+            tr.definition.replaceAll("\\s+", " ")))
       }
       if (t.sampleRows.nonEmpty) {
         sb ++= s"\n### Sample (${t.sampleRows.size} rows)\n\n"
-        sb ++= t.sampleHeader.mkString("| ", " | ", " |\n")
-        sb ++= t.sampleHeader.map(_ => "---").mkString("| ", " | ", " |\n")
-        t.sampleRows.foreach(r =>
-          sb ++= r.map(_.replace("|", "\\|")).mkString("| ", " | ", " |\n"))
+        sb ++= row(t.sampleHeader: _*)
+        sb ++= row(t.sampleHeader.map(_ => "---"): _*)
+        t.sampleRows.foreach(r => sb ++= row(r: _*))
       }
       sb ++= "\n"
     }

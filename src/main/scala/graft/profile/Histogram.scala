@@ -13,7 +13,7 @@ import graft.operators.GlobalRank
   *
   * Shape per column: the boundary percentiles come from a DISTRIBUTED
   * exact order statistic — GlobalRank's sampled range exchange +
-  * per-partition sort + zipWithIndex — not from Spark's `percentile`
+  * per-partition sort + partition offsets — not from Spark's `percentile`
   * aggregate. The builtin is exact but funnels a per-partition
   * value→count map of every distinct value into ONE final merge task: a
   * data-sized single-task reduce on a mostly-distinct double column (it

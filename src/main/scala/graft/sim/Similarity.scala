@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.SharedArtifacts.freeCheckpoint
 
 /** Similarity search over the embeddings table (SURVEY §2D).
   *
@@ -1891,10 +1892,6 @@ object Similarity {
   val lpSeedMod = 5 // vec_id % 5 == 0 → seed (20% gold labels)
 
   def knnLabelProp(spark: SparkSession, dir: String): DataFrame = {
-    def free(df: DataFrame): Unit =
-      df.queryExecution.analyzed.collectLeaves().collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach(_.unpersist(blocking = false))
     // (src, dst) edge list materialized ONCE — the per-round join relation
     val g = knnGraph(spark, dir).select(col("src"), col("dst"))
       .localCheckpoint(true)
@@ -1927,7 +1924,7 @@ object Similarity {
           when(col("is_seed"), col("label"))
             .otherwise(coalesce(col("pick"), col("cur"))).as("cur"))
         .localCheckpoint(true) // per-round checkpoint/free (GraphOps discipline)
-      free(cur)
+      freeCheckpoint(cur)
       cur = next
     }
     val out = cur.select(col("vec_id"), col("label"), col("is_seed"),
@@ -1935,8 +1932,8 @@ object Similarity {
         coalesce(col("cur") === col("label"), lit(false)).as("agrees"))
       .orderBy(col("vec_id"))
       .localCheckpoint(true) // materialize so the last round's blocks free
-    free(cur)
-    free(g)
+    freeCheckpoint(cur)
+    freeCheckpoint(g)
     out
   }
 

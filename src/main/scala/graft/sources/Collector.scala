@@ -1013,39 +1013,22 @@ object Collector {
           .map(r => (r.getAs[String]("table_name"), r.getAs[String]("column_name")))
           .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
       else Map.empty
-    // a failing engine FK read degrades to no collected edges, but is
-    // RECORDED — silent metadata loss would misrepresent the survey
-    val collectedFks: Seq[FkEdge] = source match {
-      case m: MetadataSource =>
-        try m.collectedForeignKeys
-        catch { case e: Exception =>
-          artifactWarnings +=
-            s"foreign-key metadata read failed: ${e.getClass.getSimpleName}: ${e.getMessage}"
-          Nil
-        }
-      case _ => Nil
-    }
-    // routine + custom-type surfaces degrade the same way: a throwing
-    // catalog read is recorded, never silently dropped
-    val routines: Seq[RoutineInfo] = source match {
-      case m: MetadataSource =>
-        try m.collectedRoutines
-        catch { case e: Exception =>
-          artifactWarnings +=
-            s"routine metadata read failed: ${e.getClass.getSimpleName}: ${e.getMessage}"
-          Nil
-        }
-      case _ => Nil
-    }
-    val customTypes: Seq[CustomTypeInfo] = source match {
-      case m: MetadataSource =>
-        try m.collectedCustomTypes
-        catch { case e: Exception =>
-          artifactWarnings +=
-            s"custom-type metadata read failed: ${e.getClass.getSimpleName}: ${e.getMessage}"
-          Nil
-        }
-      case _ => Nil
+    // a failing engine metadata read (foreign keys, routines, custom
+    // types, engine identity) degrades to `default`, but is RECORDED —
+    // silent metadata loss would misrepresent the survey
+    def degraded[T](what: String, default: T)(read: => T): T =
+      try read
+      catch { case e: Exception =>
+        artifactWarnings +=
+          s"$what read failed: ${e.getClass.getSimpleName}: ${e.getMessage}"
+        default
+      }
+    val (collectedFks, routines, customTypes) = source match {
+      case m: MetadataSource => (
+        degraded("foreign-key metadata", Seq.empty[FkEdge])(m.collectedForeignKeys),
+        degraded("routine metadata", Seq.empty[RoutineInfo])(m.collectedRoutines),
+        degraded("custom-type metadata", Seq.empty[CustomTypeInfo])(m.collectedCustomTypes))
+      case _ => (Seq.empty[FkEdge], Seq.empty[RoutineInfo], Seq.empty[CustomTypeInfo])
     }
     val inferredFks: Seq[FkEdge] =
       if (withKeys && goodTables.nonEmpty) {
@@ -1159,11 +1142,7 @@ object Collector {
         }
     }
     val (engineName, engineVersion) =
-      try source.engine catch { case e: Exception =>
-        artifactWarnings +=
-          s"engine identity read failed: ${e.getClass.getSimpleName}: ${e.getMessage}"
-        ("unknown", "unknown")
-      }
+      degraded("engine identity", ("unknown", "unknown"))(source.engine)
     // collection-run metadata (reference models.rs:261-310): wall-clock
     // duration + the access-level classification the reference derives
     // from what the run actually managed to read

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.SharedArtifacts.freeCheckpoint
 
 /** Iterative BPE tokenizer TRAINING — the full merge loop whose single
   * step bpe_pair_stats exposes: K rounds of (count adjacent symbol
@@ -89,10 +90,6 @@ object BpeTrainer {
 
   private def bpeTrainCompute(spark: SparkSession, dir: String,
       merges: Int): Seq[(Int, String, String, Long)] = {
-    def free(df: DataFrame): Unit =
-      df.queryExecution.analyzed.collectLeaves().collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach(_.unpersist(blocking = false))
     // the only corpus-sized aggregation: the word-frequency dict,
     // symbolized to space-separated characters — materialized ONCE
     var words = Tables.documents(spark, dir)
@@ -122,11 +119,11 @@ object BpeTrainer {
           trim(replace(replace(concat(lit(" "), col("w"), lit(" ")),
             pat, rep), pat, rep)).as("w"), col("wc"))
           .localCheckpoint(true)
-        free(words)
+        freeCheckpoint(words)
         words = merged
       }
     }
-    free(words)
+    freeCheckpoint(words)
     learned.result()
   }
 

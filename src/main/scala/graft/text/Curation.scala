@@ -1239,7 +1239,7 @@ object Curation {
     * arrival-order waste).
     *
     * Scale shape: one doc scan for lengths, then GlobalRank — the
-    * parallel range exchange + zipWithIndex device — for the global
+    * parallel range exchange + partition offsets — for the global
     * length order (NEVER an empty-partitionBy row_number window), then
     * batch_id by closed-form integer division and one batch-keyed
     * aggregation (output is n_docs/batchSize rows). Every cell is

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 import graft.Tables
+import graft.SharedArtifacts.freeCheckpoint
 
 /** Deduplication family for the training-data pipeline (SURVEY §2C):
   * exact (hash groupBy), word-shingle Jaccard, MinHash+LSH banding, and
@@ -954,10 +955,10 @@ object Dedup {
     var iter = 0
     // the seed is a plain persisted Dataset whose LINEAGE may contain
     // upstream localCheckpoint leaves (the incremental merge feeds a
-    // checkpointed label map in) — freeing it via freeRound's
+    // checkpointed label map in) — freeing it via freeCheckpoint's
     // leaf-collection would unpersist THOSE still-live blocks, so the
     // seed frees through the CacheManager and only round checkpoints
-    // (lineage-truncated, their own leaves) go through freeRound
+    // (lineage-truncated, their own leaves) go through freeCheckpoint
     var isSeed = true
     while (!converged && iter < maxIters) {
       val nbrMin = edges.join(labels, edges("src") === labels("node"))
@@ -994,9 +995,9 @@ object Dedup {
         .localCheckpoint(false)
       val changed = checkpointed.filter(col("lbl") =!= col("prev")).count()
       if (isSeed) { labels.unpersist(); isSeed = false }
-      else freeRound(labels)
+      else freeCheckpoint(labels)
       // drop `prev` for the next round's joins; the projection reads the
-      // same checkpointed blocks, and freeRound keeps unpersisting the
+      // same checkpointed blocks, and freeCheckpoint keeps unpersisting the
       // underlying RDD through it (Project over LogicalRDD)
       labels = checkpointed.drop("prev")
       converged = changed == 0
@@ -1010,21 +1011,6 @@ object Dedup {
     // bounded and LRU-evictable.
     require(converged, s"label propagation did not converge in $maxIters rounds")
     labels
-  }
-
-  /** Free a finished round's storage: Dataset.unpersist only reaches the
-    * CacheManager, but a localCheckpoint'ed round holds its blocks in the
-    * underlying RDD — unpersist THAT, or every round's label table stays
-    * pinned until the ContextCleaner gets to it.
-    */
-  private def freeRound(df: DataFrame): Unit = {
-    // the round DF may be the LogicalRDD itself or a projection over it
-    // (the post-checkpoint drop("prev")) — find the leaf either way
-    val rdds = df.queryExecution.analyzed.collectLeaves().collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
-    if (rdds.nonEmpty) rdds.foreach(_.unpersist(blocking = false))
-    else df.unpersist()
   }
 
   /** CTE chain producing `labeled` (doc_id, canon_id) + `csize`

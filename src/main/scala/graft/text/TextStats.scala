@@ -643,7 +643,7 @@ object TextStats {
       .localCheckpoint()
     val n = perDoc.count()
     val ranked = graft.operators.GlobalRank
-      .withGlobalRank(perDoc, "nll_rank", n, col("avg_nll"), col("doc_id"))
+      .withGlobalRanks(perDoc, n, Seq("nll_rank" -> Seq(col("avg_nll"), col("doc_id"))))
       .withColumn("decile", graft.operators.GlobalRank.ntileFromRank(10, n, "nll_rank"))
     ranked.groupBy(col("decile"))
       .agg(count(lit(1)).as("n_docs"),

@@ -395,6 +395,20 @@ class PlanInvariantSpec extends AnyFunSuite {
     assert(chars > 0 && chars < 350000, chars)
   }
 
+  test("GlobalRank consumers start no offset job at one range partition") {
+    // sf0.001 frames are far below 65,536 rows, so every ranking sorts
+    // into one range partition, where all offsets are 0: no sampling job
+    // and no fold job, only the exchange, the checkpoint and the query's
+    // own jobs. A second run, so every table's schema is memoized.
+    for ((name, want) <- Seq("q_rfm_segmentation" -> 14,
+        "text_nll_deciles" -> 14)) {
+      SparkEntry.queries(name)(spark, sf).collect()
+      val (_, jobs) = SparkEvents.jobs(spark)(
+        SparkEntry.queries(name)(spark, sf).collect())
+      assert(jobs == want, name)
+    }
+  }
+
   test("a second read of an unchanged table starts no Spark job") {
     Tables.lineitem(spark, sf)
     val (li, jobs) = SparkEvents.jobs(spark)(Tables.lineitem(spark, sf))

@@ -73,6 +73,62 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  // More than 3 × 65,536 rows: GlobalRank sizes its range exchange at
+  // one partition per 65,536 rows, capped at the session's 4 shuffle
+  // partitions, so these frames sort into 4 range partitions and every
+  // entry point takes its per-partition offset branch. `k` has 11
+  // values and `v` 101, so both orders are mostly ties broken by `id`.
+  private val multiRows = 250000L
+  private def multiFrame = spark.range(multiRows).select(col("id"),
+    (col("id") * 7919L % 11L).as("k"), (col("id") * 31L % 101L).as("v"))
+  private lazy val multiRef: IndexedSeq[(Long, Long, Long)] =
+    (0L until multiRows).map(id => (id, id * 7919L % 11L, id * 31L % 101L))
+
+  test("withGlobalRank and withGlobalCumsum equal a sequential scan across 4 range partitions") {
+    val byK = multiRef.sortBy(r => (r._2, r._1))
+    val rk = GlobalRank.withGlobalRank(multiFrame, "rk", col("k"), col("id"))
+    assert(rk.rdd.getNumPartitions == 4)
+    val gotRk = rk.select(col("id"), col("rk")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    byK.zipWithIndex.foreach { case (r, i) => assert(gotRk(r._1) == i + 1L, r) }
+    val cs = GlobalRank.withGlobalCumsum(multiFrame, "v", "cum", col("k"), col("id"))
+    assert(cs.rdd.getNumPartitions == 4)
+    val gotCum = cs.select(col("id"), col("cum")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    byK.map(_._3).scanLeft(0L)(_ + _).tail.zip(byK).foreach { case (c, r) =>
+      assert(gotCum(r._1) == c, r)
+    }
+  }
+
+  test("withGlobalRanks ranks two orderings across 4 range partitions") {
+    val ranked = GlobalRank.withGlobalRanks(multiFrame, multiRows, Seq(
+      ("rk_k", Seq(col("k"), col("id"))),
+      ("rk_v", Seq(col("v").desc, col("id")))))
+    assert(ranked.rdd.getNumPartitions == 4)
+    val got = ranked.select(col("id"), col("rk_k"), col("rk_v")).collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    multiRef.sortBy(r => (r._2, r._1)).zipWithIndex.foreach { case (r, i) =>
+      assert(got(r._1)._1 == i + 1L, r)
+    }
+    multiRef.sortBy(r => (-r._3, r._1)).zipWithIndex.foreach { case (r, i) =>
+      assert(got(r._1)._2 == i + 1L, r)
+    }
+  }
+
+  test("orderStats reads every rank across 4 range partitions, with a sum column") {
+    // the range bounds are sampled, so the partition boundaries are not
+    // known in advance: asking for every rank reads both sides of each
+    val (n, total, at) = GlobalRank.orderStats(multiFrame,
+      Seq(col("k"), col("id")), Some("v"), n => 1L to n)
+    assert(n == multiRows)
+    assert(total == multiRef.map(_._3).sum)
+    assert(at.size == multiRows)
+    multiRef.sortBy(r => (r._2, r._1)).zipWithIndex.foreach { case (r, i) =>
+      val row = at(i + 1L)
+      assert((row.getLong(0), row.getLong(1), row.getLong(2)) == r, i + 1L)
+    }
+  }
+
   test("waterfill first-match cap is the true optimum on random corpora") {
     // the exact derivation mixWaterfill plans (ascending sort, integer
     // floors, truncation toward zero) replayed as a pure function and

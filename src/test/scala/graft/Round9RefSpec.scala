@@ -223,6 +223,32 @@ class Round9RefSpec extends AnyFunSuite {
     assert(ArtifactLoad.loadFile(ren.toString) == a)
   }
 
+  test("markdown table rows keep the header's cell count whatever the values hold") {
+    // a JDBC default such as 'a|b', a routine parameter or FK endpoint
+    // named with a |, and sample values holding a line break or a |
+    val t = TableInfo("t", Seq(
+        ColumnInfo("c", "string", nullable = true, defaultValue = "'a|b'"),
+        ColumnInfo("d", "int", nullable = false)),
+      rowCount = 2L, sampleHeader = Seq("c", "d"),
+      sampleRows = Seq(Seq("line1\nline2", "1"), Seq("x|y", "2\r\n3")))
+    val a = Artifact("1.0", "src", Seq(t),
+      foreignKeys = Seq(FkEdge("t", "c|d", "p", "id", 1.0, likely = true)),
+      routines = Seq(RoutineInfo("f", "function",
+        Seq(RoutineParam("p|q", "int", "IN")), "int")))
+    def cells(line: String): Int = "(?<!\\\\)\\|".r.findAllIn(line).size - 1
+    val lines = MarkdownDoc.render(a).split("\n", -1).toSeq
+    var tables = 0
+    var header = -1 // cell count of the table being read, -1 outside one
+    lines.foreach { line =>
+      if (line.isEmpty) header = -1
+      else if (header >= 0) {
+        assert(line.startsWith("|"), line)
+        assert(cells(line) == header, line)
+      } else if (line.startsWith("|")) { header = cells(line); tables += 1 }
+    }
+    assert(tables == 5) // overview, relationships, routines, columns, sample
+  }
+
   test("dialect-targeted DDL maps types and identity per engine") {
     val cols = Seq(
       ColumnInfo("id", "int64", nullable = false, autoIncrement = true),
